@@ -991,23 +991,10 @@ object AtomicAppend {
       !f.exists(new Path(s"$basePath/_batch=$id/$Marker")) }
     // phase 1: land every missing batch dir concurrently — all invisible
     // (no markers), so a crash or failure anywhere leaves only debris.
-    // Every future is awaited on every exit path (commitTwo's
-    // discipline): no write is in flight past this frame even on failure.
-    if (needWrite.nonEmpty) {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(4, needWrite.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = needWrite.map { case ((df, id), sch) =>
-          Future(landBatchDir(df, basePath, new Path(s"$basePath/_batch=$id"),
-            partitionBy, statsCols, bloomCols, constraints, sch))
-        }
-        val settled = futs.map(fut => Await.ready(fut, Duration.Inf).value.get)
-        settled.collectFirst { case scala.util.Failure(t) => throw t }
-      } finally pool.shutdown()
-    }
+    graft.operators.Par.awaitAll(needWrite.map { case ((df, id), sch) =>
+      () => landBatchDir(df, basePath, new Path(s"$basePath/_batch=$id"),
+        partitionBy, statsCols, bloomCols, constraints, sch)
+    })
     // phase 2: strictly serial visibility in input order — marker, then
     // the manifest flip (manifest tables: the flip IS the commit; also
     // the heal for a marker stranded by a crash), then the log entry
@@ -1365,33 +1352,20 @@ object AtomicAppend {
     if (f.exists(cdfDest)) f.delete(cdfDest, true)
     // the mask write and the change file are INDEPENDENT writes of
     // still-invisible files, both consuming the cached match set — run
-    // them concurrently (guide §2.6; commitTwo's await-on-every-exit
-    // discipline) and flip the pointer only after BOTH have landed,
-    // exactly the serial ordering's crash surface.
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
+    // them concurrently (guide §2.6) and flip the pointer only after BOTH
+    // have landed, exactly the serial ordering's crash surface.
+    graft.operators.Par.awaitAll(Seq(
+      // the change file, keyed by the version this commit WILL get
+      () => matched.drop("__dv_file", "__dv_pos")
+        .withColumn("_change_type", F.lit("delete"))
+        .write.mode("overwrite").parquet(cdfDest.toString),
       // positions-only, one file: the mask is selective by contract (a
       // delete too big to broadcast belongs to copy-on-write deleteWhere)
-      val maskFut = Future {
-        cur.fold(matched.select("__dv_file", "__dv_pos"))(g =>
-            dvFrame(spark, basePath, g)
-              .unionByName(matched.select("__dv_file", "__dv_pos")))
-          .distinct().coalesce(1)
-          .write.mode("overwrite").parquet(genDir.toString)
-      }(scala.concurrent.ExecutionContext.global)
-      var primary: Throwable = null
-      try
-        // the change file, keyed by the version this commit WILL get
-        matched.drop("__dv_file", "__dv_pos")
-          .withColumn("_change_type", F.lit("delete"))
-          .write.mode("overwrite").parquet(cdfDest.toString)
-      catch { case t: Throwable => primary = t; throw t }
-      finally {
-        try { Await.result(maskFut, Duration.Inf); () }
-        catch { case t: Throwable => if (primary == null) throw t }
-      }
-    }
+      () => cur.fold(matched.select("__dv_file", "__dv_pos"))(g =>
+          dvFrame(spark, basePath, g)
+            .unionByName(matched.select("__dv_file", "__dv_pos")))
+        .distinct().coalesce(1)
+        .write.mode("overwrite").parquet(genDir.toString)))
     commitDvPointer(f, basePath, gen) // THE atomic visibility flip
     val logged = logCommit(spark, basePath, live, kind = "mordelete")
     require(logged == v, s"merge-on-read delete of $basePath committed as " +
@@ -1538,20 +1512,14 @@ object AtomicAppend {
       // merged schema, change-set-sized, keyed by the version this
       // commit WILL get) derives from touchedDf+src, NOT from the merged
       // write — two independent writes of still-invisible files, run
-      // concurrently (guide §2.6, commitTwo's await-on-every-exit
-      // discipline) and only then the single visibility flip below.
+      // concurrently (guide §2.6) and only then the single visibility
+      // flip below. The merged write is listed first: its failure (a
+      // constraint violation, say) is the one that propagates.
       val v = nextVersion(f, spark, basePath)
       val cdfDest = cdfPath(basePath, v)
       if (f.exists(cdfDest)) f.delete(cdfDest, true)
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val cdfFut = Future {
-          mergeChangeRows(touchedDf, src, keys, deleteWhen, merged.schema)
-            .write.mode("overwrite").parquet(cdfDest.toString)
-        }(scala.concurrent.ExecutionContext.global)
-        var primary: Throwable = null
-        try {
+      graft.operators.Par.awaitAll(Seq(
+        () => {
           val obs = org.apache.spark.sql.Observation() // fresh UUID name (see append)
           val (fields, oAggs) = BatchStats.observationAggs(merged, statsCols)
           val allAggs = oAggs ++ constraintAggs(constraints)
@@ -1568,13 +1536,9 @@ object AtomicAppend {
               .parquet(dest.toString).drop("_batch")).foreach { landed =>
               BatchBloom.write(f, dest, BatchBloom.compute(landed, bloomCols, st.rows))
             }
-          ()
-        } catch { case t: Throwable => primary = t; throw t }
-        finally {
-          try { Await.result(cdfFut, Duration.Inf); () }
-          catch { case t: Throwable => if (primary == null) throw t }
-        }
-      }
+        },
+        () => mergeChangeRows(touchedDf, src, keys, deleteWhen, merged.schema)
+          .write.mode("overwrite").parquet(cdfDest.toString)))
       if (manifestIds(spark, basePath).isEmpty)
         commitManifest(spark, basePath, live)
       graft.runtime.MetaIO.create(f, new Path(dest, Marker)).close()
@@ -1714,25 +1678,9 @@ object AtomicAppend {
     // ~0.15 s each. Ids are assigned tentatively up front (firstId + i);
     // visibility still happens only at the single manifest flip below,
     // so the crash/failure surface is unchanged — an abandoned write is
-    // the same invisible debris a crashed serial attempt left. Every
-    // future is awaited on every exit path (commitTwo's discipline), so
-    // no write is in flight past this frame even on failure.
-    val outcomes: Seq[(Long, Option[Long])] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(4, math.max(1, touched.size)))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = touched.zipWithIndex.map { case (id, i) =>
-          Future((id, rewriteOne(id, firstId + i)))
-        }
-        val settled = futs.map(fut =>
-          Await.ready(fut, Duration.Inf).value.get)
-        settled.collectFirst { case scala.util.Failure(t) => throw t }
-        settled.map(_.get)
-      } finally pool.shutdown()
-    }
+    // the same invisible debris a crashed serial attempt left.
+    val outcomes: Seq[(Long, Option[Long])] = graft.operators.Par.awaitAll(
+      touched.zipWithIndex.map { case (id, i) => () => (id, rewriteOne(id, firstId + i)) })
     val replaced = Seq.newBuilder[Long]
     val replacements = Seq.newBuilder[Long]
     outcomes.foreach { case (id, kept) =>

@@ -7,7 +7,11 @@ import org.apache.spark.sql.{functions => F}
   * anti-reprocessing pattern (`silver_job.py:127-137`, `gold_job.py:51-63`)
   * re-expressed without a driver round-trip: the max() aggregate joins
   * back as a broadcast scalar, so the filter stays inside one distributed
-  * plan and Catalyst can still push the comparison to the scan.
+  * plan. That plan costs more than the batch: the mark is a full max()
+  * aggregate over every file of the target, and the comparison is the
+  * condition of a BroadcastNestedLoopJoin, not a scan filter — the
+  * source scan reports no pushed filters, so every source row is read
+  * and compared.
   */
 object Hwm {
 

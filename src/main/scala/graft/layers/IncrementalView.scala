@@ -813,7 +813,7 @@ object IncrementalView {
       if (aux.isEmpty && vals.isEmpty) summary
       else {
         var sumM: DataFrame = null
-        runAllAwaiting((aux.toSeq ++ vals.toSeq) :+
+        graft.operators.Par.awaitAll((aux.toSeq ++ vals.toSeq) :+
           (() => { sumM = materialize(summary) }: Unit))
         sumM
       }
@@ -860,26 +860,6 @@ object IncrementalView {
         distinctCol.fold(s1)(c =>
           withDistinctCount(s1, Snapshots.read(spark, valsPath, target), groupCols, c))
     }
-  }
-
-  /** Run independent idempotent tasks concurrently. Every task is
-    * awaited on every exit path — no write is in flight past this frame
-    * even on failure — and the first failure propagates.
-    */
-  private def runAllAwaiting(tasks: Seq[() => Unit]): Unit = tasks match {
-    case Seq() => ()
-    case Seq(one) => one()
-    case many =>
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(many.size)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = many.map(t => Future(t()))
-        val settled = futs.map(fut => Await.ready(fut, Duration.Inf).value.get)
-        settled.collectFirst { case scala.util.Failure(t) => throw t }
-        ()
-      } finally pool.shutdown()
   }
 
 }

@@ -280,23 +280,14 @@ object NearDupIndex {
             "ids must be unique across the index lifetime")
       }
     }
-    // the digest's bloom build only reads batch ids — start it NOW so it
-    // overlaps the relation writes below (its WRITE still happens last,
-    // after counts: a digest must never COVER an epoch whose counts
-    // partition isn't committed, or a crash window would let a colliding
-    // later append bloom-hit, exact-scan an absent partition, and pass)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val digestF: Option[Future[DataFrame]] =
-        if (longIds)
-          Some(Future(IdDigest.digestFrame(
-            batch.select(F.col(idCol).as("id")), "id", epoch, precomputed = stats)))
-        else None
-      withDynamicOverwrite(spark) {
+    withDynamicOverwrite(spark) {
+      // the digest's bloom build only reads batch ids — it overlaps the
+      // relation writes below (its WRITE still happens last, after
+      // counts: a digest must never COVER an epoch whose counts partition
+      // isn't committed, or a crash window would let a colliding later
+      // append bloom-hit, exact-scan an absent partition, and pass). The
+      // relation writes are listed first so their failure stays primary.
+      val (_, digest) = Par.both({
         val rels = relations(sh, buckets,
           counts.getOrElse(countShingles(sh, idCol)), idCol, epoch)
         // shingles ∥ counts: independent tables, neither makes the epoch
@@ -316,37 +307,32 @@ object NearDupIndex {
           val (df, suffix, bucketCol) = rel
           (df.repartition(cfg.buckets, F.col(bucketCol)), suffix)
         }
+        // both inserts finish before anything can leave the dynamic-
+        // overwrite window: a surviving insertInto under the restored
+        // static mode would truncate every other epoch's partitions
         staged("fold.write_sh_counts") {
-          val writes = Seq(shinglesRel, countsRel).map(aligned).map { case (df, suffix) =>
-            Future(df.write.mode("overwrite").insertInto(s"$name$suffix"))
-          }
-          // await BOTH before anything can leave the dynamic-overwrite
-          // window: if the first await rethrows while the sibling is
-          // still in flight, withDynamicOverwrite's finally would
-          // restore the static mode under the surviving insertInto and
-          // it would truncate every other epoch's partitions — so each
-          // future is awaited to completion first, THEN the first
-          // failure propagates
-          val results = writes.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-          results.foreach(_.get)
+          Par.awaitAll(Seq(shinglesRel, countsRel).map(aligned).map { case (df, suffix) =>
+            () => df.write.mode("overwrite").insertInto(s"$name$suffix")
+          })
         }
         staged("fold.write_buckets") {
           val (df, suffix) = aligned(bucketsRel)
           df.write.mode("overwrite").insertInto(s"$name$suffix")
         }
-        // fold this epoch's id digest under the same overwrite discipline;
-        // a pre-digest index gains its digest table on first append (its
-        // old epochs stay uncovered → conservatively exact-scanned)
-        digestF.foreach { f =>
-          staged("fold.digest") {
-            val digest = Await.result(f, Duration.Inf)
-            if (spark.catalog.tableExists(s"${name}_digest"))
-              digest.write.mode("overwrite").insertInto(s"${name}_digest")
-            else digest.write.partitionBy("epoch").saveAsTable(s"${name}_digest")
-          }
+      }, if (longIds) Some(IdDigest.digestFrame(
+          batch.select(F.col(idCol).as("id")), "id", epoch, precomputed = stats))
+        else None)
+      // fold this epoch's id digest under the same overwrite discipline;
+      // a pre-digest index gains its digest table on first append (its
+      // old epochs stay uncovered → conservatively exact-scanned)
+      digest.foreach { d =>
+        staged("fold.digest") {
+          if (spark.catalog.tableExists(s"${name}_digest"))
+            d.write.mode("overwrite").insertInto(s"${name}_digest")
+          else d.write.partitionBy("epoch").saveAsTable(s"${name}_digest")
         }
       }
-    } finally pool.shutdown()
+    }
   }
 
   /** Test hook: perform only the first `firstRelations` of [[append]]'s

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, TimeUnit}
 
-/** Adaptive input spreading for CPU-heavy per-row kernels (tokenization,
-  * per-row hyperplane signatures, vector dot products).
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+
+/** The engine's two parallelism helpers: [[Par.awaitAll]], the one way
+  * to overlap independent driver actions, and [[Par.spread]], adaptive
+  * input spreading for CPU-heavy per-row kernels (tokenization, per-row
+  * hyperplane signatures, vector dot products).
   *
   * The problem: Spark parallelizes a parquet scan by file split, and a
   * split never crosses a row-group boundary — so a small table written as
@@ -41,26 +45,60 @@ private[graft] object Par {
     if (df.rdd.getNumPartitions * 2 >= p) df else df.repartition(p, key)
   }
 
-  /** Run independent driver actions concurrently (guide §2.6: submit
-    * independent jobs from a small pool so one job's task tail back-fills
-    * with the next's work). Every task is awaited on every exit path —
-    * no action is in flight past this frame even on failure — and the
-    * first failure propagates. Callers own idempotence: each task must
-    * be an overwrite of its own (still-invisible) output.
+  /** Run independent driver actions concurrently and return their
+    * results in task order — the engine's one overlap primitive (guide
+    * §2.6: submit independent jobs from a small pool so one job's task
+    * tail back-fills with the next's work).
+    *
+    * One task runs inline on the caller's thread. More run on a fresh
+    * pool of `min(tasks.size, defaultParallelism)` threads, so overlapped
+    * jobs never oversubscribe the session's cores. The pool's threads are
+    * created by the caller and so inherit its Spark local properties
+    * (job group, description, scheduler pool) and active session —
+    * cancelling the caller's job group cancels the tasks' jobs too.
+    *
+    * Every task is awaited on every exit path, interrupts included: no
+    * action is in flight past this frame, even on failure. The first
+    * failure in task order is rethrown, with any later ones attached via
+    * `addSuppressed`. Task order is also submission order, so under the
+    * FIFO scheduler an earlier task's jobs take free cores first. Callers
+    * own idempotence: each task must be an overwrite of its own
+    * (still-invisible) output, committed only after this returns.
     */
-  def awaitAll(tasks: Seq[() => Unit]): Unit = tasks match {
-    case Seq() => ()
-    case Seq(one) => one()
+  def awaitAll[A](tasks: Seq[() => A]): Seq[A] = tasks match {
+    case Seq() => Nil
+    case Seq(one) => Seq(one())
     case many =>
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(many.size)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = many.map(t => Future(t()))
-        val settled = futs.map(fut => Await.ready(fut, Duration.Inf).value.get)
-        settled.collectFirst { case scala.util.Failure(t) => throw t }
-        ()
-      } finally pool.shutdown()
+      val width = math.min(many.size,
+        SparkSession.active.sparkContext.defaultParallelism)
+      val pool = Executors.newFixedThreadPool(width)
+      val futs =
+        try many.map(t => pool.submit(new Callable[A] { def call(): A = t() }))
+        finally drain(pool)
+      val settled = futs.map { f =>
+        try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) }
+      }
+      settled.collect { case Left(t) => t } match {
+        case Seq() => settled.collect { case Right(a) => a }
+        case first +: rest =>
+          rest.foreach(t => if (t ne first) first.addSuppressed(t))
+          throw first
+      }
+  }
+
+  /** [[awaitAll]] for two values of different types; `a`'s failure is primary. */
+  def both[A, B](a: => A, b: => B): (A, B) = awaitAll[Any](Seq(() => a, () => b)) match {
+    case Seq(x, y) => (x.asInstanceOf[A], y.asInstanceOf[B]) }
+
+  /** Shut `pool` down and wait until every submitted task has finished.
+    * An interrupt does not cut the wait short; it is re-asserted after.
+    */
+  private def drain(pool: ExecutorService): Unit = {
+    pool.shutdown()
+    var interrupted = false
+    while (!pool.isTerminated)
+      try pool.awaitTermination(1, TimeUnit.MINUTES)
+      catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread.interrupt()
   }
 }

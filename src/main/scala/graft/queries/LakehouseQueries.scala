@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
+import graft.operators.Par
+
 /** The 9 gold analytical views' query shapes
   * (`sql/gold_layer_views_delta.sql`) exercised on the driver's `events`
   * table, oracle-checked: events.event_type='error' plays the is_fraud
@@ -15,24 +17,6 @@ import org.apache.spark.sql.{functions => F}
 object LakehouseQueries extends QueryPack {
 
   private def ev(s: SparkSession, d: String): DataFrame = CoreQueries.events(s, d)
-
-  /** Evaluate two INDEPENDENT driver actions concurrently (guide §2.6 —
-    * the incremental-view chains are serialized tiny materializations of
-    * pure stage latency; overlapping each independent pair back-fills the
-    * idle cores). The first runs on a daemon-backed future, the second on
-    * the calling thread; both are awaited on every exit path.
-    */
-  private[queries] def par2[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val fut = Future(a)(scala.concurrent.ExecutionContext.global)
-    var primary: Throwable = null
-    val bv =
-      try b
-      catch { case t: Throwable => primary = t; throw t }
-      finally if (primary != null) Await.ready(fut, Duration.Inf)
-    (Await.result(fut, Duration.Inf), bv)
-  }
 
   private val err = "CASE WHEN event_type = 'error' THEN 1 ELSE 0 END"
 
@@ -259,13 +243,13 @@ object LakehouseQueries extends QueryPack {
       // (round-16, guide §2.6: this chain is ~8 serialized tiny actions
       // of pure driver/stage latency, plan-identical across rounds)
       val (f01, f12) = IvmFixture.feeds(o, withBucket = false)
-      val (d01, d12) = LakehouseQueries.par2(f01.localCheckpoint(), f12.localCheckpoint())
+      val (d01, d12) = Par.both(f01.localCheckpoint(), f12.localCheckpoint())
       // the advanced summaries are view-sized (18 rows) but their lineage
       // reaches back through the feeds to the base scans — each is
       // consumed by the synopsis apply AND the next application, so
       // materialize them too (refresh reads them from snapshots instead)
       val sum1 = iv.applyChanges(sum0, d01, grp, Seq("price")).localCheckpoint()
-      val ((aux1, _), sum2) = LakehouseQueries.par2(
+      val ((aux1, _), sum2) = Par.both(
         iv.applyChangesExtremes(aux0, d01, sum1, v1, grp, "price", 2),
         iv.applyChanges(sum1, d12, grp, Seq("price")).localCheckpoint())
       val (aux2, _) = iv.applyChangesExtremes(aux1, d12, sum2, v2, grp, "price", 2)
@@ -295,8 +279,8 @@ object LakehouseQueries extends QueryPack {
       // materializations and the two v0→v1 applies are independent
       // action pairs — overlap each (round-16, guide §2.6, see ql11)
       val (f01, f12) = IvmFixture.feeds(o, withBucket = true)
-      val (d01, d12) = LakehouseQueries.par2(f01.localCheckpoint(), f12.localCheckpoint())
-      val (sum1, aux1) = LakehouseQueries.par2(
+      val (d01, d12) = Par.both(f01.localCheckpoint(), f12.localCheckpoint())
+      val (sum1, aux1) = Par.both(
         iv.applyChanges(sum0, d01, grp, Seq("price")).localCheckpoint(),
         iv.applyChanges(aux0, d01, grp :+ "price_bucket", Nil).localCheckpoint())
       val sum2 = iv.applyChanges(sum1, d12, grp, Seq("price"))
@@ -684,9 +668,10 @@ object LakehouseQueries extends QueryPack {
     // appends, an optimistic fold, and a post-fold append (a commit that
     // must rebase its live set over the fold's). The payload reads the
     // tip; the oracle aggregates the raw table — a hash match proves the
-    // OCC commit chain is content-exact end to end. (The RACING half of
-    // the protocol — concurrent writers, conflict aborts — is
-    // OccTableSpec's; a correctness gate needs a deterministic run.)
+    // OCC commit chain is content-exact end to end, including the two
+    // racing appends below. Conflict aborts (a fold whose sources were
+    // replaced) stay OccTableSpec's: forcing one needs a scripted
+    // interleaving, which a query cannot stage.
     "ql23_occ_commits" -> ((s, d) => {
       val occ = graft.layers.OccTable
       val base = Scratch.dir("graft-ql23-") + "/events"
@@ -699,7 +684,7 @@ object LakehouseQueries extends QueryPack {
       // (claimBatchId + CAS commit loop; OccFuzzSpec's surface). Final
       // content is the union either way; only the interleaving of the
       // two commit log entries varies, which no reader observes.
-      LakehouseQueries.par2(
+      Par.both(
         occ.append(fact.filter(F.col("ts") < day11), base, statsCols = Seq("user_id")),
         occ.append(fact.filter(F.col("ts") >= day11 && F.col("ts") < day21), base,
           statsCols = Seq("user_id")))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{functions => F}
 
-import graft.operators.{Dedup, NearDupIndex}
+import graft.operators.{Dedup, NearDupIndex, Par}
 
 /** Streaming corpus ingest with incremental dedup against persisted
   * history — the streaming face of [[graft.operators.NearDupIndex]]:
@@ -183,23 +183,14 @@ object CorpusIngestStream {
       //    idempotent overwrites keyed by batchId with no ordering
       //    dependency (a crash anywhere replays both to the same state),
       //    so the land write runs CONCURRENTLY with the fold's guard and
-      //    early relation writes
+      //    early relation writes. The fold is listed first so its
+      //    failure stays primary; the land write still finishes before
+      //    the finally unpersists its caches, so a replayed trigger never
+      //    overwrites batch=N under an orphaned land write.
       if (staged("probe")(!accepted.isEmpty)) {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val landF = Future(staged("land")(
-          accepted.write.mode("overwrite").parquet(s"$acceptedPath/batch=$batchId")))(
-          scala.concurrent.ExecutionContext.global)
         val accIds = accepted.select("doc_id")
-        // the land future must be awaited on EVERY exit path: a fold
-        // failure that escapes without the await would leave the land
-        // write in flight while the finally unpersists its caches and
-        // the replayed trigger overwrites the same batch=N directory
-        // under it — two concurrent overwrites of one path. Awaiting in
-        // the finally (and keeping the fold's failure primary when both
-        // fail) serializes the orphan out of existence.
-        try {
-          staged("fold")(crashAfterFoldRelations match {
+        Par.awaitAll(Seq(
+          () => staged("fold")(crashAfterFoldRelations match {
             case Some(k) =>
               NearDupIndex.appendPartial(accepted, "doc_id", "text", indexName, batchId, cfg, k)
             case None =>
@@ -209,13 +200,9 @@ object CorpusIngestStream {
                 "doc_id", indexName, batchId, cfg,
                 counts = Some(counts.join(accIds, Seq("doc_id"), "left_semi")),
                 onStage = onStage)
-          })
-          Await.result(landF, Duration.Inf)
-        } catch { case fold: Throwable =>
-          try Await.result(landF, Duration.Inf)
-          catch { case land: Throwable if land ne fold => fold.addSuppressed(land) }
-          throw fold
-        }
+          }),
+          () => staged("land")(
+            accepted.write.mode("overwrite").parquet(s"$acceptedPath/batch=$batchId"))))
       }
     } finally {
       // this runs once per trigger, forever — and a FAILED trigger gets

@@ -74,12 +74,12 @@ class SimilaritySpec extends AnyFunSuite {
     joined.values.foreach(rows => assert(rows.size == 5))
   }
 
-  test("blocked kernel's SQ8 prefilter is sound: pairs ≡ brute force at the threshold") {
+  test("blocked kernel ≡ brute force at the threshold: same pairs and cosines") {
     import spark.implicits._
-    // stress the quantization bound where it could lose a pair: cosines
-    // planted densely AROUND the threshold (scaled copies + small-angle
-    // perturbations), plus magnitude outliers (one huge element shrinks
-    // every other code toward 0 — the worst case for scale = max|v|/127)
+    // stress the threshold where a kernel could lose a pair: cosines
+    // planted densely AROUND it (scaled copies + small-angle
+    // perturbations), plus magnitude outliers (one huge element per
+    // vector)
     val rnd = new scala.util.Random(23L)
     val dim = 64
     def unit(): Array[Double] = {
@@ -106,7 +106,7 @@ class SimilaritySpec extends AnyFunSuite {
     val blocked = pairSet(Similarity.cosinePairsBlocked(df, "vec_id", "embedding", 0.4))
     assert(brute.nonEmpty, "fixture planted no threshold-crossing pairs")
     assert(blocked == brute,
-      s"prefilter changed the result: missing=${(brute -- blocked).take(5)} " +
+      s"blocked kernel diverged from brute force: missing=${(brute -- blocked).take(5)} " +
         s"extra=${(blocked -- brute).take(5)}")
   }
 
