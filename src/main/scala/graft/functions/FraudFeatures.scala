@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
@@ -88,29 +90,37 @@ object FraudFeatures {
   /** Apply the full 15-feature silver contract + partition columns.
     * Expects typed columns: trans_timestamp, dob, amt, gender,
     * lat/long/merch_lat/merch_long.
+    *
+    * One `withColumns` projection: one analysis of the plan, where a
+    * chain of 18 `withColumn`s analyses it 18 times. So
+    * `is_distant_transaction` takes the distance expression itself, not
+    * the `distance_km` column; codegen's subexpression elimination
+    * computes it once.
     */
   def withFeatures(df: DataFrame): DataFrame = {
     val ts = F.col("trans_timestamp")
-    df
-      .withColumn("distance_km",
-        distanceKm(F.col("lat"), F.col("long"), F.col("merch_lat"), F.col("merch_long")))
-      .withColumn("age", age(ts, F.col("dob")))
-      .withColumn("hour", hourOf(ts))
-      .withColumn("day_of_week", dayOfWeek(ts))
-      .withColumn("is_weekend", isWeekend(ts))
-      .withColumn("hour_sin", hourSin(ts))
-      .withColumn("hour_cos", hourCos(ts))
-      .withColumn("log_amount", logAmount(F.col("amt")))
-      .withColumn("is_zero_amount", isZeroAmount(F.col("amt")))
-      .withColumn("is_high_amount", isHighAmount(F.col("amt")))
-      .withColumn("amount_bin", amountBin(F.col("amt")))
-      .withColumn("gender_encoded", genderEncoded(F.col("gender")))
-      .withColumn("is_distant_transaction", isDistantTransaction(F.col("distance_km")))
-      .withColumn("is_late_night", isLateNight(ts))
-      .withColumn("year", F.year(ts))
-      .withColumn("month", F.month(ts))
-      .withColumn("day", F.dayofmonth(ts))
-      .withColumn("ingestion_time", F.current_timestamp())
+    val amt = F.col("amt")
+    val distance =
+      distanceKm(F.col("lat"), F.col("long"), F.col("merch_lat"), F.col("merch_long"))
+    df.withColumns(ListMap(
+      "distance_km" -> distance,
+      "age" -> age(ts, F.col("dob")),
+      "hour" -> hourOf(ts),
+      "day_of_week" -> dayOfWeek(ts),
+      "is_weekend" -> isWeekend(ts),
+      "hour_sin" -> hourSin(ts),
+      "hour_cos" -> hourCos(ts),
+      "log_amount" -> logAmount(amt),
+      "is_zero_amount" -> isZeroAmount(amt),
+      "is_high_amount" -> isHighAmount(amt),
+      "amount_bin" -> amountBin(amt),
+      "gender_encoded" -> genderEncoded(F.col("gender")),
+      "is_distant_transaction" -> isDistantTransaction(distance),
+      "is_late_night" -> isLateNight(ts),
+      "year" -> F.year(ts),
+      "month" -> F.month(ts),
+      "day" -> F.dayofmonth(ts),
+      "ingestion_time" -> F.current_timestamp()))
   }
 
   /** The scoring-API variant of the contested features

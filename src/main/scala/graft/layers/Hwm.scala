@@ -2,6 +2,7 @@ package graft.layers
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.types.StructType
 
 /** High-water-mark incremental processing — the reference's manual
   * anti-reprocessing pattern (`silver_job.py:127-137`, `gold_job.py:51-63`)
@@ -33,11 +34,15 @@ object Hwm {
     * Hadoop FileSystem resolved from the path's own scheme + session conf,
     * so s3a://, hdfs:// and file:// warehouses all work — a local
     * java.io.File check would silently report "absent" for every
-    * object-store path and re-process the full history.
+    * object-store path and re-process the full history. A given `schema`
+    * binds the read to it, so no job reads parquet footers to infer one.
     */
-  def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
+  def readIfExists(
+      spark: SparkSession,
+      path: String,
+      schema: Option[StructType] = None): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(path)) else None
+    if (fs.exists(p)) Some(schema.fold(spark.read)(spark.read.schema).parquet(path)) else None
   }
 }

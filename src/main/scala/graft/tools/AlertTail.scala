@@ -93,8 +93,9 @@ object AlertTail {
     * against the transaction table and handed to `sink` (default:
     * println — the webhook stand-in), ordered by prediction time then id
     * so re-runs print deterministically. The alert log is already
-    * idempotent per trans_num (ScoringStream's anti-join), so each alert
-    * is delivered at most once per checkpoint lineage.
+    * idempotent per trans_num (ScoringStream's in-batch dedup and
+    * anti-join), so each alert is delivered at most once per checkpoint
+    * lineage.
     */
   def follow(spark: SparkSession, alertsPath: String, txPath: String,
       checkpointDir: String, sink: String => Unit = println): StreamingQuery = {

@@ -69,7 +69,7 @@ object ScaleQueryBench {
       n -> timeOnce(n, fn)
     }
     def fmt(v: Double) = (math.round(v * 1000) / 1000.0).toString
-    val qs = rows.map { case (k, v) => s""""${k.takeWhile(_ != '_')}":${fmt(v)}""" }
+    val qs = rows.map { case (k, v) => s""""$k":${fmt(v)}""" }
       .mkString("{", ",", "}")
     val total = rows.collect { case (_, v) if v >= 0 => v }.sum
     println(s"""{"metric":"scale_query_bench","factor":$factor,"cpus":$cpus,""" +

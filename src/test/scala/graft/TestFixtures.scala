@@ -121,9 +121,8 @@ object TestFixtures {
     Silver.transform(Debezium.withBronzeColumns(Debezium.parse(raw)), None)
   }
 
-  def tmpDir(prefix: String): Path = {
-    val p = Paths.get("/tmp", s"graft-$prefix-${System.nanoTime()}")
-    Files.createDirectories(p)
-    p
-  }
+  /** A fresh `graft-<prefix>-*` directory under the JVM's temp root,
+    * deleted with its contents at JVM exit.
+    */
+  def tmpDir(prefix: String): Path = Paths.get(graft.queries.Scratch.dir(s"graft-$prefix-"))
 }
