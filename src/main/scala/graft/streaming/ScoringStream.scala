@@ -18,10 +18,11 @@ import graft.scoring.{MlModel, RuleModel}
   * parse → silver features → rule score → idempotent predictions sink +
   * alert log, all inside foreachBatch.
   *
-  * No `collect()`: the reference iterates rows on the driver
+  * No row `collect()`: the reference iterates rows on the driver
   * (`realtime_prediction_job.py:314`); here scoring is a Column expression
-  * and the dedup check is a distributed left-anti join, so the path scales
-  * with executors.
+  * and the existence check is a distributed left-anti join, so the path
+  * scales with executors. Only the in-batch key check of a large batch
+  * brings a hash per row to the driver ([[oneRowPerKey]]).
   */
 object ScoringStream {
 
@@ -47,49 +48,70 @@ object ScoringStream {
     RuleModel.newPredictionsOnly(preds, existing)
   }
 
-  /** The micro-batch with one row per `trans_num`. A batch whose plan
-    * statistics fit one `spark.sql.files.maxPartitionBytes` split is
-    * coalesced to ONE partition, where the dedup needs no exchange. A
-    * larger batch, or one of unknown size, is hash-partitioned on
-    * `trans_num` into as many partitions as the source planned: a fixed
-    * count, which adaptive execution does not coalesce. (Left to
-    * coalesce, the 60k-row trigger was scored on one or two partitions of
-    * a 4-core box and took ~1.5 s longer.)
+  /** Whether the micro-batch runs as ONE task, where its `trans_num`
+    * dedup needs no exchange and the epoch lands one predictions file
+    * and at most one alerts file, not one per source split for every
+    * later trigger to list and open. It does when its plan statistics fit
+    * one `spark.sql.files.maxPartitionBytes` split and stay under
+    * [[OneTaskMaxBytes]], or when the source planned a single partition
+    * anyway. A larger batch keeps the source's partitions and goes
+    * through [[oneRowPerKey]].
     */
-  private def oneRowPerKey(batch: DataFrame): DataFrame = {
-    val size = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    val placed =
-      if (size <= batch.sparkSession.sessionState.conf.filesMaxPartitionBytes) batch.coalesce(1)
-      else batch.repartition(batch.rdd.getNumPartitions, F.col("trans_num"))
-    placed.dropDuplicates("trans_num")
+  private def runsAsOneTask(batch: DataFrame): Boolean = {
+    val cut = math.min(OneTaskMaxBytes, batch.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    batch.queryExecution.optimizedPlan.stats.sizeInBytes <= cut || batch.rdd.getNumPartitions == 1
+  }
+
+  /** The one-task cut in plan statistics (~6.5 KB per parsed envelope
+    * row, so ~2.5k rows; the benchmark's 100-row alert trigger reads
+    * 0.65 MB, StreamBench's 60k-row trigger ~390 MB). Measured on 4
+    * cores with 3 or 10 landed files per trigger, the two paths' triggers
+    * interleaved into growing tables: after 10 to 30 triggers of history
+    * one task was faster at 100, 1k and 3k rows (by 100-600 ms, its
+    * epochs leaving a quarter of the files), and at 5k and 10k rows only
+    * once 8 to 16 earlier triggers had landed. A lone trigger without
+    * history was as fast or faster on the planned splits at every size
+    * tried, 100 rows to 5k (by 0-230 ms).
+    */
+  private val OneTaskMaxBytes: Long = 16L << 20
+
+  /** `scored` with one row per `trans_num`, for a batch of several
+    * partitions. A single-stage job brings the 64-bit hashes of the
+    * cached keys to the driver (8 bytes a row) and looks for a repeat;
+    * the rows go through a `trans_num` exchange only when one repeats.
+    * Measured on a 60k-row trigger (4 cores), a dedup of every batch
+    * through that exchange cost ~1.5 s in a fresh JVM, a shuffled
+    * `groupBy` check of the keys ~3.5 s fresh and ~0.3 s warm, this
+    * check ~0.8 s fresh and ~0.2 s warm.
+    */
+  private def oneRowPerKey(scored: DataFrame): DataFrame = {
+    import scored.sparkSession.implicits._
+    val hashes = scored.select(F.xxhash64(F.col("trans_num"))).as[Long].collect()
+    java.util.Arrays.sort(hashes)
+    if ((1 until hashes.length).forall(i => hashes(i) != hashes(i - 1))) scored
+    else scored.dropDuplicates("trans_num").cache()
   }
 
   /** What the anti-joins read of a sink table: no footer-inference job. */
   private val keySchema = Some(StructType(Seq(StructField("trans_num", StringType))))
 
-  /** The standing scoring query. Each micro-batch:
-    *  - runs as ONE partition when it fits one file split (a 100-row
-    *    trigger's plan statistics read ~0.65 MB, 60k rows ~390 MB), so a
-    *    small epoch needs no exchange and lands one predictions file and
-    *    at most one alerts file, not one per source split for every later
-    *    trigger to list and open. A larger batch keeps the partitions the
-    *    source planned;
-    *  - keeps one row per `trans_num` ([[oneRowPerKey]]), so a replay that
-    *    lands in its original's micro-batch is scored and alerted once. A
-    *    replay in a LATER micro-batch is dropped by the predictions
-    *    anti-join ([[RuleModel.newPredictionsOnly]]);
-    *  - writes the alerts FIRST, each leg behind its own trans_num
-    *    anti-join against its table. The two appends are not atomic
-    *    together: a crash between them re-runs the batch with the alerts
-    *    landed and the predictions not. The predictions anti-join then
-    *    lets the whole batch through again, and only the alerts anti-join
-    *    keeps its alerts from landing twice. In the other order, a crash
-    *    would leave predictions whose replay the anti-join empties, and
-    *    their alerts would be lost. A batch-keyed overwrite of the alerts
-    *    would not do either: a re-run after a partial predictions write
-    *    rescores only the remainder and would drop the prefix's alerts.
-    * Both sides of the anti-joins are read against a one-column
-    * `trans_num` schema, so no trigger runs a parquet footer-inference job.
+  /** The standing scoring query. Each micro-batch is scored with one row
+    * per `trans_num` ([[runsAsOneTask]], [[oneRowPerKey]]), so a replay
+    * that lands in its original's micro-batch is scored and alerted once;
+    * a replay in a LATER micro-batch is dropped by the predictions
+    * anti-join ([[RuleModel.newPredictionsOnly]]). The alerts are written
+    * FIRST, each leg behind its own `trans_num` anti-join against its
+    * table. The two appends are not atomic together: a crash between them
+    * re-runs the batch with the alerts landed and the predictions not.
+    * The predictions anti-join then lets the whole batch through again,
+    * and only the alerts anti-join keeps its alerts from landing twice.
+    * In the other order, a crash would leave predictions whose replay the
+    * anti-join empties, and their alerts would be lost. A batch-keyed
+    * overwrite of the alerts would not do either: a re-run after a
+    * partial predictions write rescores only the remainder and would drop
+    * the prefix's alerts. Both anti-joins read their table against a
+    * one-column `trans_num` schema, so no trigger runs a parquet
+    * footer-inference job.
     */
   def start(
       spark: SparkSession,
@@ -106,7 +128,11 @@ object ScoringStream {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val existing = Hwm.readIfExists(spark, predictionsPath, keySchema)
-        val preds = scoreBatch(oneRowPerKey(batch), existing, model).cache()
+        val oneTask = runsAsOneTask(batch)
+        val scored = scoreBatch(
+          if (oneTask) batch.coalesce(1).dropDuplicates("trans_num") else batch,
+          existing, model).cache()
+        val preds = if (oneTask) scored else oneRowPerKey(scored)
         // the Slack-alert leg (`realtime_prediction_job.py:115-209`)
         // becomes an alert-log table of the would-be notifications
         val alerts = preds.filter(F.col("is_fraud_predicted") === 1)
@@ -115,6 +141,7 @@ object ScoringStream {
           .write.mode("append").parquet(alertsPath)
         preds.write.mode("append").parquet(predictionsPath)
         preds.unpersist()
+        scored.unpersist()
         ()
       }
       .start()

@@ -11,13 +11,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.ScoringStream
+import graft.ingest.Debezium
+import graft.streaming.{BronzeStream, ScoringStream}
 
 /** The scoring trigger's body ([[ScoringStream.start]]): a replay in its
   * original's micro-batch is scored once, a small epoch runs as one
   * partition and lands one file per table without a shuffle, a batch
-  * above one split keeps its planned partitions, and a re-run after a
-  * crash between the alert and prediction writes adds no alert.
+  * above the one-task cut keeps its planned partitions (and runs as one
+  * task when the source planned one), and a re-run after a crash between
+  * the alert and prediction writes adds no alert.
   */
 class ScoringStreamSpec extends AnyFunSuite {
 
@@ -150,6 +152,43 @@ class ScoringStreamSpec extends AnyFunSuite {
     val preds = countsBy(work.resolve("preds").toString)
     assert(preds.keySet == live && preds.values.forall(_ == 1L))
     assert(countsBy(work.resolve("alerts").toString).values.forall(_ == 1L))
+  }
+
+  test("a batch above the cut without repeated keys lands its planned partitions") {
+    val work = TestFixtures.tmpDir("score-unique")
+    val in = work.resolve("in")
+    (0 until 3).foreach(f => TestFixtures.writeEnvelopes(in, s"u$f.jsonl",
+      TestFixtures.randomRows(30, seed = 200L + f)))
+    val session = spark.newSession()
+    session.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    once(session, work, "ckpt")
+    // no key repeats, so no exchange regroups the rows: one file per split
+    assert(parquetFiles(work.resolve("preds").toString).size > 1)
+    val preds = countsBy(work.resolve("preds").toString)
+    assert(preds.size == 90 && preds.values.forall(_ == 1L))
+  }
+
+  test("a batch above the cut that the source planned as one split runs as one task") {
+    val work = TestFixtures.tmpDir("score-onesplit")
+    val in = work.resolve("in")
+    val originals = TestFixtures.randomRows(40, seed = 44L)
+    TestFixtures.writeEnvelopes(in, "a.jsonl", originals ++ TestFixtures.smokeRows ++ originals.take(10))
+    // one split holds the whole file, but the plan statistics of its
+    // parsed rows, several times the file's bytes, do not fit one
+    val split = 2 * Files.size(in.resolve("a.jsonl"))
+    val session = spark.newSession()
+    session.conf.set("spark.sql.files.maxPartitionBytes", split.toString)
+    val estimate = Debezium.parse(session.read.schema(BronzeStream.rawSchema).text(in.toString)
+      .withColumnRenamed("value", "json_string")).queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(estimate > split, s"plan statistics $estimate fit the $split-byte split")
+    listening { jobs =>
+      val (tasks, shuffleBytes) = jobs.of(once(session, work, "ckpt"))
+      assert(tasks.forall(_ == 1), s"stage task counts $tasks")
+      assert(shuffleBytes == 0L, "the dedup of a one-partition batch needs no exchange")
+    }
+    assert(parquetFiles(work.resolve("preds").toString).size == 1)
+    val preds = countsBy(work.resolve("preds").toString)
+    assert(preds.size == 44 && preds.values.forall(_ == 1L))
   }
 
   test("re-running a batch whose alerts landed but whose predictions did not adds no alert") {
