@@ -161,8 +161,12 @@ class ScoringStreamSpec extends AnyFunSuite {
       TestFixtures.randomRows(30, seed = 200L + f)))
     val session = spark.newSession()
     session.conf.set("spark.sql.files.maxPartitionBytes", "4096")
-    once(session, work, "ckpt")
-    // no key repeats, so no exchange regroups the rows: one file per split
+    listening { jobs =>
+      val (tasks, shuffleBytes) = jobs.of(once(session, work, "ckpt"))
+      assert(tasks.max > 1, s"stage task counts $tasks")
+      // no key repeats, so the key check finds nothing and no exchange runs
+      assert(shuffleBytes == 0L, "a batch without repeated keys was shuffled")
+    }
     assert(parquetFiles(work.resolve("preds").toString).size > 1)
     val preds = countsBy(work.resolve("preds").toString)
     assert(preds.size == 90 && preds.values.forall(_ == 1L))
