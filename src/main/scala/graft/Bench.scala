@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.runtime.GraftSession
+
 /** Benchmark main — prints ONE JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR.
   *
@@ -86,24 +88,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata timestamps are unadjusted MICROS; read as TimestampType,
-      // not NTZ (see GraftSession) — scan-time decision keeps pushdown
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // GraftSession's canonical conf (round-15: the bench session had
-      // drifted from the engine's documented settings surface — identical
-      // on a real cluster, see GraftSession's scaladoc): subset-key
-      // co-partitioning is the contract NearDupIndex's bucketed joins
-      // rely on to skip their reshuffle.
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-bench", cpus)
+      .config("spark.sql.shuffle.partitions", cpus) // see Verify
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

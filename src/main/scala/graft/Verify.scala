@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.runtime.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +10,12 @@ object Verify {
     // single query at the driver's exact config without the full 103-run
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    // one shuffle partition per SPARK_GRAFT_CPUS core instead of
+    // GraftSession's 32: the suite's inputs are small, and Verify and Bench
+    // share the override so the checked results come from the plans Bench
+    // times
+    val spark = GraftSession.builder("graft-verify", cpus)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata timestamps are unadjusted MICROS; read as TimestampType,
-      // not NTZ (see GraftSession) — scan-time decision keeps pushdown
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // GraftSession's canonical conf (round-15, same note as Bench)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -106,8 +106,8 @@ object TextFunctions {
       F.least(stopwordRatio(text) * 5.0, F.lit(1.0)) * 0.3
 
   /** Byte-level compression-ratio quality signal — wraps the native
-    * codegen expression [[graft.plans.DeflateRatioExpression]] (requires
-    * [[graft.plans.GraftFunctions.register]] on the session). Low ratios
+    * codegen expression [[graft.plans.DeflateRatioExpression]] (injected
+    * by [[graft.plans.GraftExtensions]]). Low ratios
     * mark repetitive/templated text the word-level filters miss; gate
     * with a length floor (short strings report overhead-dominated
     * ratios > 1). Spec-gated — no SQL-engine analog exists.
@@ -170,8 +170,8 @@ object TextFunctions {
   }
 
   /** Unicode NFC normalization — wraps the native codegen expression
-    * [[graft.plans.NfcNormalizeExpression]] (requires
-    * [[graft.plans.GraftFunctions.register]] on the session). DuckDB
+    * [[graft.plans.NfcNormalizeExpression]] (injected by
+    * [[graft.plans.GraftExtensions]]). DuckDB
     * twin: `nfc_normalize(text)` — NFC is defined by the Unicode
     * standard, so conformant engines produce identical bytes.
     */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.{functions => F}
 
-import graft.plans.{BoundedExtremes, BoundedExtremesAggregate}
+import graft.plans.BoundedExtremes
 
 /** Incremental maintenance of a grouped summary from a [[Merge.diff]]
   * change feed — the consumer side of the CDF story: a downstream
@@ -130,7 +130,6 @@ object IncrementalView {
       col: String, k: Int): DataFrame = {
     require(state.schema(col).dataType == LongType,
       s"extremes maintenance requires a BIGINT measure, got ${state.schema(col).dataType}")
-    BoundedExtremesAggregate.register(state.sparkSession)
     val names = extCols(col)
     state.groupBy(groupCols.map(F.col): _*)
       .agg(F.call_function("bounded_extremes", F.col(col), F.lit(k)).as("__ext"))

@@ -515,7 +515,6 @@ object Curation {
   def domainQuota(df: DataFrame, idCol: String, domainCol: String,
       quality: Column, quota: Int): DataFrame = {
     require(quota > 0, s"quota must be positive, got $quota")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.groupBy(domainCol)
       .agg(F.call_function("topk_rows",
         F.struct(quality.as("q"), F.col(idCol)), F.lit(quota)).as("top"))

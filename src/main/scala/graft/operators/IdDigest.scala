@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{functions => F}
 
@@ -46,18 +46,15 @@ object IdDigest {
   val Fpp: Double = 0.001
   val CapItems: Long = 4000000L
 
-  /** Registers Spark's internal bloom-membership expression (it has no
-    * public SQL name) so the guard can probe a literal bloom without a
-    * UDF. Idempotent.
+  /** Builder for `graft_bloom_contains`: Spark's internal
+    * bloom-membership expression has no public SQL name, so
+    * [[graft.plans.GraftExtensions]] injects it under this one and the
+    * guard can probe a literal bloom without a UDF.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      exprs => {
-        require(exprs.length == 2, "graft_bloom_contains(bloom, value)")
-        BloomFilterMightContain(exprs(0), exprs(1))
-      },
-      "scala_udf")
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2, "graft_bloom_contains(bloom, value)")
+    BloomFilterMightContain(exprs(0), exprs(1))
+  }
 
   /** The digest relation rows for one batch: exactly one row
     * `(n, min_id, max_id, bloom, epoch)` — `epoch` last so the frame can
@@ -116,8 +113,6 @@ object IdDigest {
   def suspectEpochs(batch: DataFrame, idCol: String,
       digests: DataFrame, presentEpochs: Seq[Long],
       precomputed: Option[(Long, Long, Long)] = None): Seq[Long] = {
-    val spark = batch.sparkSession
-    register(spark)
     // metadata only — never the bloom column (parquet prunes it away).
     // An n = 0 row still COVERS its epoch (provably empty, nothing to
     // scan); it just can't be a suspect.

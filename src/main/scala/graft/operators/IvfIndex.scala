@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
 
 import graft.functions.VectorFunctions.asDouble
-import graft.plans.GraftFunctions
 
 /** Persisted IVF (inverted-file) ANN index — the scale tier of
   * [[Similarity]]: the expensive work (KMeans fit + cell assignment)
@@ -58,8 +57,6 @@ object IvfIndex {
       kmeansInitMode: String = "k-means||"): Unit = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-
-    GraftFunctions.register(df.sparkSession)
     // drop any previous digest BEFORE overwriting the vectors: a crash
     // between the two would otherwise leave a digest describing the OLD
     // corpus next to the NEW vectors, and a later append screening
@@ -267,7 +264,6 @@ object IvfIndex {
     */
   def append(df: DataFrame, idCol: String, vecCol: String, root: String,
       epoch: Long, requireNewIds: Boolean = true): Unit = {
-    GraftFunctions.register(df.sparkSession)
     appendAssigned(
       assignCells(df, idCol, vecCol, root)
         .withColumn("nrm",
@@ -695,7 +691,6 @@ object IvfIndex {
     * cell-local joins against the index (the ingest stream's dedup gate).
     */
   def assignCells(df: DataFrame, idCol: String, vecCol: String, root: String): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val cents = loadCentroids(df.sparkSession, root)
     if (cents.size > LiteralKernelMaxCells)
       // large-C route (see [[LiteralKernelMaxCells]]): the single-nearest
@@ -738,7 +733,6 @@ object IvfIndex {
   def assignCellsMulti(df: DataFrame, idCol: String, vecCol: String, root: String,
       nProbe: Int, coarseProbes: Int = 0): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    GraftFunctions.register(df.sparkSession)
     // one centroid read serves both the route decision and the kernel
     // (ADVICE r12: routing used to count cells with its own collect)
     val cents = loadCentroids(df.sparkSession, root)
@@ -765,7 +759,6 @@ object IvfIndex {
     */
   private[graft] def assignCellsMultiTwoLevelLiteral(df: DataFrame, idCol: String,
       vecCol: String, root: String, nProbe: Int, coarseProbes: Int): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val sorted = twoLevelSortedCandidates(df.sparkSession, root, coarseProbes, nProbe)
     df.select(F.col(idCol).as("id"), asDouble(F.col(vecCol)).as("vec"))
       .withColumn("cells",
@@ -802,7 +795,7 @@ object IvfIndex {
     * nodes) and keeps the literal kernel's zero-shuffle profile, where
     * the round-12 broadcast-JOIN kernel ([[assignCellsMultiJoin]], kept
     * as a cross-check route) paid an n·(d + nProbe) groupBy exchange.
-    * Measured (ProfileAssign, 20k × 64-dim): the routed kernels match
+    * Measured (20k × 64-dim, local[32]): the routed kernels match
     * the literal kernel at C=16, win ~8× at C=128, ~30× at C=512, and
     * run ~1 s at C=2048 where the two-level LITERAL kernel takes 128 s
     * (its CASE chain still embeds every centroid). The threshold keeps
@@ -825,7 +818,6 @@ object IvfIndex {
     */
   private[graft] def assignCellsMultiExpr(df: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Int, Array[Double])], nProbe: Int): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.select(F.col(idCol).as("id"), asDouble(F.col(vecCol)).as("vec"))
       .withColumn("cells",
         graft.plans.NearestCellsExpression.column(F.col("vec"), cents, nProbe))
@@ -857,7 +849,6 @@ object IvfIndex {
   private[graft] def assignCellsMultiJoin(df: DataFrame, idCol: String, vecCol: String,
       root: String, nProbe: Int): DataFrame = {
     val spark = df.sparkSession
-    GraftFunctions.register(spark)
     val cents = spark.read.parquet(s"$root/centroids.parquet")
       .select(F.col("cell").cast("long").as("__cell"),
         asDouble(F.col("centroid")).as("__c"))
@@ -947,7 +938,6 @@ object IvfIndex {
     */
   private def twoLevelSortedCandidates(spark: SparkSession, root: String,
       coarseProbes: Int, nProbe: Int): org.apache.spark.sql.Column = {
-    GraftFunctions.register(spark)
     val sortedCents = loadCentroids(spark, root).sortBy(_._1)
     // the SAME driver-side structure the expression kernel consumes —
     // the two kernels must rank identical groups for the parity pin
@@ -1002,7 +992,6 @@ object IvfIndex {
   def calibrateProbes(spark: SparkSession, root: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, targetRecall: Double,
       sampleQueries: Int = 64): ProbeCalibration = {
-    GraftFunctions.register(spark)
     val c = loadCentroids(spark, root).size
     // deterministic sample: hash-ordered head — no seed drift across runs
     val qs = queries.select(F.col(idCol), F.col(vecCol))
@@ -1209,7 +1198,6 @@ object IvfIndex {
   def cellLocalPairs(spark: SparkSession, root: String, minCos: Double,
       nProbe: Int = 1, coarseProbes: Int = 0): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    GraftFunctions.register(spark)
     val v = vectors(spark, root)
     // multi-probe assignment is the leg's compute hot spot (C vec_dots +
     // a C-struct sort PER VECTOR) and the self-join below consumes it
@@ -1279,7 +1267,6 @@ object IvfIndex {
       k: Int,
       nProbe: Int = UseStoredProbes,
       excludeId: Option[Long] = None): DataFrame = {
-    GraftFunctions.register(spark)
     val cells = probeCells(spark, root, query, resolveProbes(spark, root, nProbe))
     val qArr = F.array(query.map(F.lit(_)).toSeq: _*)
     val qNorm = math.sqrt(query.map(x => x * x).sum)
@@ -1310,7 +1297,6 @@ object IvfIndex {
       nProbe: Int = UseStoredProbes,
       margin: Int = 3,
       excludeId: Option[Long] = None): DataFrame = {
-    GraftFunctions.register(spark)
     val cells = probeCells(spark, root, query, resolveProbes(spark, root, nProbe))
     val qNorm = math.sqrt(query.map(x => x * x).sum)
     val qScale = query.map(math.abs).max / 127.0
@@ -1374,7 +1360,6 @@ object IvfIndex {
   def knnJoin(spark: SparkSession, root: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nProbe: Int = UseStoredProbes): DataFrame = {
-    GraftFunctions.register(spark)
     val q = assignCellsMulti(queries, idCol, vecCol, root,
       resolveProbes(spark, root, nProbe))
       .withColumn("q_norm", F.sqrt(F.call_function("vec_dot", F.col("vec"), F.col("vec"))))

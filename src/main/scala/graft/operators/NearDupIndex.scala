@@ -213,10 +213,7 @@ object NearDupIndex {
     */
   private[graft] def appendCoded(batch: DataFrame, sh: DataFrame, buckets: DataFrame,
       idCol: String, name: String, epoch: Long, cfg: Config,
-      requireNewIds: Boolean = true, counts: Option[DataFrame] = None,
-      onStage: (String, Double) => Unit = null): Unit = {
-    def staged[T](stage: String)(body: => T): T =
-      graft.runtime.StageTimer.staged(onStage, stage)(body)
+      requireNewIds: Boolean = true, counts: Option[DataFrame] = None): Unit = {
     val spark = batch.sparkSession
     requireSameFamily(spark, name, cfg)
     val longIds = batch.schema(idCol).dataType == org.apache.spark.sql.types.LongType
@@ -226,7 +223,7 @@ object NearDupIndex {
     // the digest row itself — per-trigger job count is the throughput
     // constant at micro-batch sizes, so passes that can share, share.
     val stats: Option[(Long, Long, Long)] =
-      if (longIds) staged("fold.stats") {
+      if (longIds) {
         val r = batch.agg(F.count(F.lit(1)).as("n"),
           F.count_distinct(F.col(idCol)).as("nd"),
           F.min(idCol).as("mn"), F.max(idCol).as("mx")).head()
@@ -240,7 +237,7 @@ object NearDupIndex {
         }
         Some((n, if (n == 0) 0L else r.getLong(2), if (n == 0) 0L else r.getLong(3)))
       } else None
-    if (requireNewIds) staged("fold.guard") {
+    if (requireNewIds) {
       // batch-INTERNAL uniqueness for non-long id types (long ids were
       // checked by the combined stats pass above): a doc id arriving
       // twice WITHIN one batch would pass the cross-epoch join below
@@ -310,15 +307,11 @@ object NearDupIndex {
         // both inserts finish before anything can leave the dynamic-
         // overwrite window: a surviving insertInto under the restored
         // static mode would truncate every other epoch's partitions
-        staged("fold.write_sh_counts") {
-          Par.awaitAll(Seq(shinglesRel, countsRel).map(aligned).map { case (df, suffix) =>
-            () => df.write.mode("overwrite").insertInto(s"$name$suffix")
-          })
-        }
-        staged("fold.write_buckets") {
-          val (df, suffix) = aligned(bucketsRel)
-          df.write.mode("overwrite").insertInto(s"$name$suffix")
-        }
+        Par.awaitAll(Seq(shinglesRel, countsRel).map(aligned).map { case (df, suffix) =>
+          () => df.write.mode("overwrite").insertInto(s"$name$suffix")
+        })
+        val (df, suffix) = aligned(bucketsRel)
+        df.write.mode("overwrite").insertInto(s"$name$suffix")
       }, if (longIds) Some(IdDigest.digestFrame(
           batch.select(F.col(idCol).as("id")), "id", epoch, precomputed = stats))
         else None)
@@ -326,11 +319,9 @@ object NearDupIndex {
       // a pre-digest index gains its digest table on first append (its
       // old epochs stay uncovered → conservatively exact-scanned)
       digest.foreach { d =>
-        staged("fold.digest") {
-          if (spark.catalog.tableExists(s"${name}_digest"))
-            d.write.mode("overwrite").insertInto(s"${name}_digest")
-          else d.write.partitionBy("epoch").saveAsTable(s"${name}_digest")
-        }
+        if (spark.catalog.tableExists(s"${name}_digest"))
+          d.write.mode("overwrite").insertInto(s"${name}_digest")
+        else d.write.partitionBy("epoch").saveAsTable(s"${name}_digest")
       }
     }
   }

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
-import graft.plans.GraftFunctions
-
 /** Product quantization (PQ) — the third compression tier of the ANN
   * stack (float scan → SQ8 int8 re-rank → PQ): vectors are split into
   * `m` subspaces, each subspace k-means-coded to one of `k` centroid
@@ -54,7 +52,6 @@ object ProductQuant {
     // (silently wrong ADC) or index 0 (error). 16-64 is the usual PQ
     // range; 256 would need unsigned decode at every lookup.
     require(m >= 1 && k >= 2 && k <= 128, s"need 1 <= m, 2 <= k <= 128; got m=$m k=$k")
-    GraftFunctions.register(df.sparkSession) // normalized() uses vec_dot
     val sample = withNormalized(df.select(F.col(idCol).as("id"), F.col(vecCol)), vecCol)
       .select(F.col("id"), F.col("__vn").as("v"))
       .orderBy(F.xxhash64(F.col("id")), F.col("id"))
@@ -134,7 +131,6 @@ object ProductQuant {
     * (idCol, pq_codes array<tinyint>).
     */
   def encode(df: DataFrame, idCol: String, vecCol: String, cb: Codebooks): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // materialize the normalized vector, THEN each subspace slice, as
     // projection steps — the k candidate structs of a subspace then
     // reference one computed slice column instead of re-slicing (and
@@ -178,8 +174,6 @@ object ProductQuant {
     */
   def topK(codes: DataFrame, vectors: DataFrame, idCol: String, vecCol: String,
       query: Array[Double], cb: Codebooks, k: Int, margin: Int = 10): DataFrame = {
-    val spark = codes.sparkSession
-    GraftFunctions.register(spark)
     require(query.length == cb.dim, s"query dim ${query.length} != codebook dim ${cb.dim}")
     val qn = {
       val n = math.sqrt(query.map(x => x * x).sum)

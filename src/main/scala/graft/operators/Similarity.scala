@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.{functions => F}
 
-import graft.plans.GraftFunctions
-
 /** Approximate/exact nearest-neighbor search over an embedding column.
   *
   * Three tiers, by scale:
@@ -31,7 +29,6 @@ object Similarity {
     * single scan + TakeOrderedAndProject — no shuffle of the corpus.
     */
   def cosineTopK(df: DataFrame, idCol: String, vecCol: String, queryId: Long, k: Int): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val q = df.filter(F.col(idCol) === queryId)
       .select(F.col(vecCol).as("q_vec"), norm(F.col(vecCol)).as("q_norm"))
     df.filter(F.col(idCol) =!= queryId)
@@ -63,7 +60,6 @@ object Similarity {
     */
   def knnJoin(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     // adaptive spread (see [[Par]]): the whole O(N·|Q|·d) dot-product scan
     // is map-side against the broadcast query set — its parallelism IS the
     // corpus partition count
@@ -116,7 +112,6 @@ object Similarity {
   def cosinePairsBlocked(
       df: DataFrame, idCol: String, vecCol: String, minCos: Double,
       blocks: Int = 0): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val spark = df.sparkSession
     import spark.implicits._
     val blockCount =
@@ -171,7 +166,6 @@ object Similarity {
   def lshMultiProbeTopK(
       df: DataFrame, idCol: String, vecCol: String, queryId: Long, k: Int,
       planes: Int = 4, dim: Int = 64, seed: Long = 7L): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val hp = hyperplanes(planes, dim, seed)
     val code = hp.zipWithIndex
       .map { case (p, j) =>
@@ -204,7 +198,6 @@ object Similarity {
     * (round-half-up on non-negative magnitudes matches SQL ROUND).
     */
   def quantizeEmbeddings(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // adaptive spread (see [[Par]]): per-element quantization is the map
     // cost; off a single-row-group file it would run on one core
     Par.spread(df.select(F.col(idCol), F.col(vecCol)), F.col(idCol))
@@ -232,7 +225,6 @@ object Similarity {
     */
   def quantizedTopK(df: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, margin: Int = 3): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val quant = quantizeEmbeddings(df, idCol, vecCol)
     val qRow = quant.filter(F.col(idCol) === queryId)
       .select(F.col("q_codes").as("qq_codes"), F.col("q_scale").as("qq_scale"),
@@ -262,7 +254,6 @@ object Similarity {
     * bounded slices.
     */
   def cosinePairs(df: DataFrame, idCol: String, vecCol: String, minCos: Double): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val n = df.select(F.col(idCol).as("a_id"), F.col(vecCol).as("a_vec"),
       norm(F.col(vecCol)).as("a_norm"))
     val m = df.select(F.col(idCol).as("b_id"), F.col(vecCol).as("b_vec"),
@@ -291,7 +282,6 @@ object Similarity {
       dim: Int, bits: Int = 24, chunkBits: Int = 3, seed: Long = 42L,
       candidateBounded: Boolean = true): DataFrame = {
     require(bits % chunkBits == 0, "bits must divide into chunks")
-    GraftFunctions.register(df.sparkSession)
     val rnd = new scala.util.Random(seed)
     val planes: Seq[Column] = Seq.fill(bits)(
       F.array(Seq.fill(dim)(F.lit(rnd.nextGaussian())): _*))
@@ -429,7 +419,6 @@ object Similarity {
       perCell: Int, planes: Int = 4, dim: Int = 64, seed: Long = 7L,
       sampleSeed: String = "cs1"): DataFrame = {
     require(perCell > 0, s"perCell must be positive, got $perCell")
-    GraftFunctions.register(df.sparkSession)
     val hp = hyperplanes(planes, dim, seed)
     val code = hp.zipWithIndex
       .map { case (p, j) =>

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
-import graft.plans.FreqItemsAggregate
-
 /** Mergeable distinct-count sketches — the pre-aggregation pattern that
   * makes "distinct users per (day, dim…)" tractable at 100 TB.
   *
@@ -94,7 +92,6 @@ object Sketches {
     require(k + 1 > 1.0 / minShare,
       s"exactHeavyHitters: need k+1 > 1/minShare (= ${1.0 / minShare}) for the " +
         "completeness guarantee; raise k or minShare")
-    FreqItemsAggregate.register(df.sparkSession)
     val rows = df.filter(F.col(itemCol).isNotNull)
     // candidates and n from ONE pass; the 1-row result explodes to ≤ k
     // rows carrying n, which the broadcast join attaches to every match

@@ -137,9 +137,10 @@ object BandJoin {
       copy(left = l, right = r)
   }
 
-  /** User API: inner band join. Injects the planner strategy into the
-    * session (idempotent) and builds the logical node from the analyzed
-    * child plans. Columns must be unambiguous across the two sides.
+  /** User API: inner band join. Builds the logical node from the
+    * analyzed child plans; [[BandJoinStrategy]], injected by
+    * [[GraftExtensions]], plans it. Columns must be unambiguous across
+    * the two sides.
     */
   def join(
       left: DataFrame, right: DataFrame,
@@ -147,8 +148,6 @@ object BandJoin {
       leftTs: String, rightTs: String,
       bandUs: Long): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(BandJoinStrategy))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ BandJoinStrategy
     org.apache.spark.sql.graft.DatasetBridge.ofRows(spark,
       BandJoinPlan(
         left.queryExecution.analyzed, right.queryExecution.analyzed,

@@ -2,7 +2,6 @@ package graft.plans
 
 import scala.collection.Searching.{Found, InsertionPoint}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -222,23 +221,19 @@ case class BoundedExtremesAggregate(
 
 object BoundedExtremesAggregate {
 
-  /** Register `bounded_extremes(value, k)`; value must be BIGINT and k a
+  /** Builder for `bounded_extremes(value, k)`; value must be BIGINT and k a
     * literal int (the synopsis-size contract documented on the class).
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_extremes",
-      exprs => {
-        require(exprs.length == 2, "bounded_extremes(value, k)")
-        val k = exprs(1).eval(InternalRow.empty) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(s"k must be a literal int, got $other")
-        }
-        require(exprs.head.dataType == LongType,
-          s"bounded_extremes expects a BIGINT value, got ${exprs.head.dataType} — " +
-            "cast integral measures to long; float extremes need the rebuild path")
-        BoundedExtremesAggregate(exprs.head, k).toAggregateExpression()
-      },
-      "scala_udf")
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2, "bounded_extremes(value, k)")
+    val k = exprs(1).eval(InternalRow.empty) match {
+      case i: Int => i
+      case l: Long => l.toInt
+      case other => throw new IllegalArgumentException(s"k must be a literal int, got $other")
+    }
+    require(exprs.head.dataType == LongType,
+      s"bounded_extremes expects a BIGINT value, got ${exprs.head.dataType} — " +
+        "cast integral measures to long; float extremes need the rebuild path")
+    BoundedExtremesAggregate(exprs.head, k).toAggregateExpression()
+  }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
@@ -76,13 +75,9 @@ object DeflateRatioExpression {
     total.toDouble / raw.length
   }
 
-  /** Register `deflate_ratio` for SQL / `call_function` use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_ratio",
-      exprs => {
-        require(exprs.length == 1, "deflate_ratio(text)")
-        DeflateRatioExpression(Cast(exprs.head, StringType))
-      },
-      "scala_udf")
+  /** SQL / `call_function` builder for `deflate_ratio` (injected by [[GraftExtensions]]). */
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 1, "deflate_ratio(text)")
+    DeflateRatioExpression(Cast(exprs.head, StringType))
+  }
 }

@@ -2,7 +2,6 @@ package graft.plans
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -152,22 +151,18 @@ object FreqItemsAggregate {
       StructField("count_hi", LongType, nullable = false))),
     containsNull = false)
 
-  /** Register `freq_items_sketch(item, k)`: item a string column, k a
+  /** Builder for `freq_items_sketch(item, k)`: item a string column, k a
     * foldable integer literal.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_items_sketch",
-      exprs => {
-        require(exprs.length == 2, "freq_items_sketch(item, k)")
-        val k = exprs(1).eval(InternalRow.empty) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(s"k must be a literal int, got $other")
-        }
-        require(exprs.head.dataType == StringType,
-          s"freq_items_sketch expects a string item, got ${exprs.head.dataType}")
-        FreqItemsAggregate(exprs.head, k).toAggregateExpression()
-      },
-      "scala_udf")
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2, "freq_items_sketch(item, k)")
+    val k = exprs(1).eval(InternalRow.empty) match {
+      case i: Int => i
+      case l: Long => l.toInt
+      case other => throw new IllegalArgumentException(s"k must be a literal int, got $other")
+    }
+    require(exprs.head.dataType == StringType,
+      s"freq_items_sketch expects a string item, got ${exprs.head.dataType}")
+    FreqItemsAggregate(exprs.head, k).toAggregateExpression()
+  }
 }

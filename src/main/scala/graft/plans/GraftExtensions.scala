@@ -2,11 +2,16 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point: makes the engine's native
-  * expressions available at session build time —
+import graft.operators.IdDigest
+
+/** The engine's one registration path: injects every native SQL
+  * function and the [[BandJoin.BandJoinStrategy]] planner strategy when
+  * a session is built. [[graft.runtime.GraftSession.builder]] installs
+  * it, and sessions derived from one (`newSession()`, streaming
+  * `foreachBatch` clones) inherit it. A session built anywhere else
+  * must install it itself —
   *
   * {{{
   * SparkSession.builder()
@@ -14,27 +19,35 @@ import org.apache.spark.sql.types.DoubleType
   * // or spark.sql.extensions=graft.plans.GraftExtensions (config)
   * }}}
   *
-  * Sessions created elsewhere (e.g. the driver's Verify/Bench mains) get
-  * the same functions via the runtime path `GraftFunctions.register`.
+  * — or the native functions do not resolve and `BandJoin.join` has no
+  * physical plan.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("haversine_km"),
-      new ExpressionInfo(classOf[HaversineExpression].getName, "haversine_km"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 4, "haversine_km(lat1, lon1, lat2, lon2)")
-        val Seq(a, b, c, d) = exprs.map(x => Cast(x, DoubleType): Expression)
-        HaversineExpression(a, b, c, d)
-      }))
-    e.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "vec_dot(a, b)")
-        DotProduct(exprs(0), exprs(1))
-      }))
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     e.injectPlannerStrategy(_ => BandJoin.BandJoinStrategy)
   }
+}
+
+object GraftExtensions {
+
+  /** (SQL name, expression class, builder) — each builder and its
+    * argument checks live in the expression's companion object.
+    */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("haversine_km", classOf[HaversineExpression], HaversineExpression.builder),
+    ("deflate_ratio", classOf[DeflateRatioExpression], DeflateRatioExpression.builder),
+    ("nfc_normalize", classOf[NfcNormalizeExpression], NfcNormalizeExpression.builder),
+    ("vec_dot", classOf[DotProduct], DotProduct.builder),
+    ("ivf_nearest_cells", classOf[NearestCellsExpression], NearestCellsExpression.builder),
+    ("ivf_nearest_cells_2l", classOf[TwoLevelNearestCellsExpression],
+      TwoLevelNearestCellsExpression.builder),
+    ("topk_rows", classOf[TopKAggregate], TopKAggregate.builder),
+    ("freq_items_sketch", classOf[FreqItemsAggregate], FreqItemsAggregate.builder),
+    ("bounded_extremes", classOf[BoundedExtremesAggregate], BoundedExtremesAggregate.builder),
+    ("graft_bloom_contains", classOf[BloomFilterMightContain], IdDigest.builder))
 }

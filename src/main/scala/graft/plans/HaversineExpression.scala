@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -11,8 +10,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * breaks codegen and serializes every row; this compiles to a single
   * static-method call inside the generated loop.
   *
-  * Used via SQL (`haversine_km(lat1, lon1, lat2, lon2)`) after
-  * [[HaversineExpression.register]], or through the composed-Column twin
+  * Used via SQL (`haversine_km(lat1, lon1, lat2, lon2)`, injected by
+  * [[GraftExtensions]]), or through the composed-Column twin
   * `FraudFeatures.distanceKm` (identical math, built-in trig).
   */
 case class HaversineExpression(
@@ -56,18 +55,14 @@ object HaversineExpression {
     2 * EarthRadiusKm * math.asin(math.sqrt(a))
   }
 
-  /** Register `haversine_km` in the session's function registry for SQL
-    * and `call_function` use. Inputs are cast to double here (the
+  /** SQL / `call_function` builder for `haversine_km` (injected by
+    * [[GraftExtensions]]). Inputs are cast to double here (the
     * expression itself is monomorphic — `ExpectsInputTypes` is
     * sql-private in Spark 4, so coercion happens at the builder).
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "haversine_km",
-      exprs => {
-        require(exprs.length == 4, "haversine_km(lat1, lon1, lat2, lon2)")
-        val Seq(a, b, c, d) = exprs.map(e => Cast(e, DoubleType): Expression)
-        HaversineExpression(a, b, c, d)
-      },
-      "scala_udf")
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 4, "haversine_km(lat1, lon1, lat2, lon2)")
+    val Seq(a, b, c, d) = exprs.map(e => Cast(e, DoubleType): Expression)
+    HaversineExpression(a, b, c, d)
+  }
 }

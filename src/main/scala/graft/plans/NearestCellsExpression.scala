@@ -133,32 +133,28 @@ object NearestCellsExpression {
     F.call_function("ivf_nearest_cells", vec, lit, F.lit(nProbe))
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ivf_nearest_cells",
-      exprs => {
-        require(exprs.length == 3,
-          "ivf_nearest_cells(vec, array<struct<cell,centroid>> literal, nProbe literal)")
-        require(exprs(1).foldable && exprs(2).foldable,
-          "ivf_nearest_cells: centroids and nProbe must be literals")
-        val rows = exprs(1).eval().asInstanceOf[ArrayData]
-        val n = rows.numElements()
-        val cells = new Array[Int](n)
-        val cents = new Array[Array[Double]](n)
-        val ccs = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          val r = rows.getStruct(i, 2)
-          cells(i) = r.getInt(0)
-          cents(i) = r.getArray(1).toDoubleArray()
-          var s = 0.0
-          var j = 0
-          while (j < cents(i).length) { s += cents(i)(j) * cents(i)(j); j += 1 }
-          ccs(i) = s
-          i += 1
-        }
-        NearestCellsExpression(exprs(0), cells, cents, ccs,
-          exprs(2).eval().asInstanceOf[Number].intValue())
-      },
-      "scala_udf")
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 3,
+      "ivf_nearest_cells(vec, array<struct<cell,centroid>> literal, nProbe literal)")
+    require(exprs(1).foldable && exprs(2).foldable,
+      "ivf_nearest_cells: centroids and nProbe must be literals")
+    val rows = exprs(1).eval().asInstanceOf[ArrayData]
+    val n = rows.numElements()
+    val cells = new Array[Int](n)
+    val cents = new Array[Array[Double]](n)
+    val ccs = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      val r = rows.getStruct(i, 2)
+      cells(i) = r.getInt(0)
+      cents(i) = r.getArray(1).toDoubleArray()
+      var s = 0.0
+      var j = 0
+      while (j < cents(i).length) { s += cents(i)(j) * cents(i)(j); j += 1 }
+      ccs(i) = s
+      i += 1
+    }
+    NearestCellsExpression(exprs(0), cells, cents, ccs,
+      exprs(2).eval().asInstanceOf[Number].intValue())
+  }
 }

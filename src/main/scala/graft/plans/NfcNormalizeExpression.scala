@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -57,13 +56,9 @@ object NfcNormalizeExpression {
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  /** Register `nfc_normalize` for SQL / `call_function` use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      exprs => {
-        require(exprs.length == 1, "nfc_normalize(text)")
-        NfcNormalizeExpression(Cast(exprs.head, StringType))
-      },
-      "scala_udf")
+  /** SQL / `call_function` builder for `nfc_normalize` (injected by [[GraftExtensions]]). */
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 1, "nfc_normalize(text)")
+    NfcNormalizeExpression(Cast(exprs.head, StringType))
+  }
 }

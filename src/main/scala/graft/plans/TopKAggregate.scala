@@ -2,7 +2,6 @@ package graft.plans
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -117,27 +116,23 @@ case class TopKAggregate(
 
 object TopKAggregate {
 
-  /** Register `topk_rows(struct, k)`; the struct contract is documented on
+  /** Builder for `topk_rows(struct, k)`; the struct contract is documented on
     * the class. k must be a foldable integer literal.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_rows",
-      exprs => {
-        require(exprs.length == 2, "topk_rows(struct, k)")
-        val k = exprs(1).eval(InternalRow.empty) match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(s"k must be a literal int, got $other")
-        }
-        val c = exprs.head
-        c.dataType match {
-          case s: StructType =>
-            require(s.length >= 2 && s(0).dataType == DoubleType && s(1).dataType == LongType,
-              "topk_rows: struct fields must start with (sort: double, tiebreak: long)")
-          case other => throw new IllegalArgumentException(s"topk_rows expects a struct, got $other")
-        }
-        TopKAggregate(c, k).toAggregateExpression()
-      },
-      "scala_udf")
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2, "topk_rows(struct, k)")
+    val k = exprs(1).eval(InternalRow.empty) match {
+      case i: Int => i
+      case l: Long => l.toInt
+      case other => throw new IllegalArgumentException(s"k must be a literal int, got $other")
+    }
+    val c = exprs.head
+    c.dataType match {
+      case s: StructType =>
+        require(s.length >= 2 && s(0).dataType == DoubleType && s(1).dataType == LongType,
+          "topk_rows: struct fields must start with (sort: double, tiebreak: long)")
+      case other => throw new IllegalArgumentException(s"topk_rows expects a struct, got $other")
+    }
+    TopKAggregate(c, k).toAggregateExpression()
+  }
 }

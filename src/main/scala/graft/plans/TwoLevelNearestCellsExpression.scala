@@ -16,11 +16,21 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * coarse group centers, explore only the `coarseProbes` nearest groups,
   * fine-rank their member cells — ~(G + P·C/G)·d per row) existed only
   * as the C-literal CASE chain, which is allocation-bound at hundreds of
-  * cells (ProfileAssign: 29 s at C=512 where the flat matrix kernel
-  * needs 0.2 s) and not constructible at all at corpus-scale C. This
-  * expression carries the group structure in its reference object —
-  * zero shuffle, O(1) plan nodes — making the n·√C·d tier actually
-  * usable at the scale it exists for.
+  * cells (29 s at C=512 where the flat matrix kernel needs 0.2 s) and
+  * not constructible at all at corpus-scale C. This expression carries
+  * the group structure in its reference object — zero shuffle, O(1)
+  * plan nodes — making the n·√C·d tier actually usable at the scale it
+  * exists for. Measured (20k vectors, local[32], warm): 0.27 s at
+  * C=512 and 0.35 s at C=2048, where the literal chain needed 128 s;
+  * on one partition at C=2048/d=64 it edges the flat matrix kernel
+  * (1.47 vs 1.73 s). The crossover runs the other way when the sweep is
+  * memory-bandwidth-bound: at d=1536 × C=2048 (a 25 MB matrix) it reads
+  * 5.27 s against the flat kernel's 3.55 s (51 vs 45 s on one
+  * partition) — ~4× fewer doubles touched, but in per-group scattered
+  * order, where the flat kernel's sequential sweep keeps the
+  * prefetcher. The tier pays off in the compute-bound regime (small to
+  * mid d) and in flop count at C ≫ 10³; ScaleBench's `highd` leg keeps
+  * the d=1536 reading current in docs/BENCH_SCALE.json.
   *
   * Semantics are the literal two-level kernel's, bit for bit (pinned by
   * SimilaritySpec): coarse distance `cg·cg − 2·v·cg` with left-to-right
@@ -164,50 +174,46 @@ object TwoLevelNearestCellsExpression {
       F.lit(coarseProbes), F.lit(nProbe))
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ivf_nearest_cells_2l",
-      exprs => {
-        require(exprs.length == 5,
-          "ivf_nearest_cells_2l(vec, cents literal, groups literal, coarseProbes, nProbe)")
-        require(exprs.drop(1).forall(_.foldable),
-          "ivf_nearest_cells_2l: all arguments past vec must be literals")
-        val centRows = exprs(1).eval().asInstanceOf[ArrayData]
-        val n = centRows.numElements()
-        val cells = new Array[Int](n)
-        val cents = new Array[Array[Double]](n)
-        val ccs = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          val r = centRows.getStruct(i, 2)
-          cells(i) = r.getInt(0)
-          cents(i) = r.getArray(1).toDoubleArray()
-          var s = 0.0
-          var j = 0
-          while (j < cents(i).length) { s += cents(i)(j) * cents(i)(j); j += 1 }
-          ccs(i) = s
-          i += 1
-        }
-        val groupRows = exprs(2).eval().asInstanceOf[ArrayData]
-        val gN = groupRows.numElements()
-        val centers = new Array[Array[Double]](gN)
-        val ccg = new Array[Double](gN)
-        val members = new Array[Array[Int]](gN)
-        var g = 0
-        while (g < gN) {
-          val r = groupRows.getStruct(g, 2)
-          centers(g) = r.getArray(0).toDoubleArray()
-          var s = 0.0
-          var j = 0
-          while (j < centers(g).length) { s += centers(g)(j) * centers(g)(j); j += 1 }
-          ccg(g) = s
-          members(g) = r.getArray(1).toIntArray()
-          g += 1
-        }
-        TwoLevelNearestCellsExpression(exprs(0), cells, cents, ccs,
-          centers, ccg, members,
-          exprs(3).eval().asInstanceOf[Number].intValue(),
-          exprs(4).eval().asInstanceOf[Number].intValue())
-      },
-      "scala_udf")
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 5,
+      "ivf_nearest_cells_2l(vec, cents literal, groups literal, coarseProbes, nProbe)")
+    require(exprs.drop(1).forall(_.foldable),
+      "ivf_nearest_cells_2l: all arguments past vec must be literals")
+    val centRows = exprs(1).eval().asInstanceOf[ArrayData]
+    val n = centRows.numElements()
+    val cells = new Array[Int](n)
+    val cents = new Array[Array[Double]](n)
+    val ccs = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      val r = centRows.getStruct(i, 2)
+      cells(i) = r.getInt(0)
+      cents(i) = r.getArray(1).toDoubleArray()
+      var s = 0.0
+      var j = 0
+      while (j < cents(i).length) { s += cents(i)(j) * cents(i)(j); j += 1 }
+      ccs(i) = s
+      i += 1
+    }
+    val groupRows = exprs(2).eval().asInstanceOf[ArrayData]
+    val gN = groupRows.numElements()
+    val centers = new Array[Array[Double]](gN)
+    val ccg = new Array[Double](gN)
+    val members = new Array[Array[Int]](gN)
+    var g = 0
+    while (g < gN) {
+      val r = groupRows.getStruct(g, 2)
+      centers(g) = r.getArray(0).toDoubleArray()
+      var s = 0.0
+      var j = 0
+      while (j < centers(g).length) { s += centers(g)(j) * centers(g)(j); j += 1 }
+      ccg(g) = s
+      members(g) = r.getArray(1).toIntArray()
+      g += 1
+    }
+    TwoLevelNearestCellsExpression(exprs(0), cells, cents, ccs,
+      centers, ccg, members,
+      exprs(3).eval().asInstanceOf[Number].intValue(),
+      exprs(4).eval().asInstanceOf[Number].intValue())
+  }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -80,27 +79,9 @@ object DotProduct {
 
   def dotDF(a: ArrayData, b: ArrayData): Double = dotFD(b, a)
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      exprs => {
-        require(exprs.length == 2, "vec_dot(a, b)")
-        DotProduct(exprs(0), exprs(1))
-      },
-      "scala_udf")
-}
-
-/** One-stop idempotent registration of the engine's native expressions. */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    HaversineExpression.register(spark)
-    DeflateRatioExpression.register(spark)
-    NfcNormalizeExpression.register(spark)
-    DotProduct.register(spark)
-    NearestCellsExpression.register(spark)
-    TwoLevelNearestCellsExpression.register(spark)
-    TopKAggregate.register(spark)
-    FreqItemsAggregate.register(spark)
-    BoundedExtremesAggregate.register(spark)
+  def builder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2, "vec_dot(a, b)")
+    DotProduct(exprs(0), exprs(1))
   }
 }
+

@@ -36,7 +36,6 @@ object AdvancedQueries extends QueryPack {
     // k-heaps reduced map-side BEFORE the shuffle — must equal the
     // window row_number formulation (q14's oracle).
     "qa03_topk_aggregate" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
       Tables.load(s, d, "orders")
         .join(F.broadcast(Tables.load(s, d, "customer")),
           F.col("o_custkey") === F.col("c_custkey"))

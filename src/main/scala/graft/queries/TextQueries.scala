@@ -466,7 +466,6 @@ object TextQueries extends QueryPack {
     // and the md5 proves byte parity with DuckDB's standard-defined
     // nfc_normalize.
     "qd35_normalize_text" -> ((s, d) => {
-      graft.plans.GraftFunctions.register(s)
       val t = F.concat(F.col("text"), F.lit("  Cafe\u0301 NAI\u0308VE\ttest  "))
       docs(s, d)
         .select(F.col("doc_id"),

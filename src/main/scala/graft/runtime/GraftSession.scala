@@ -2,6 +2,8 @@ package graft.runtime
 
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.GraftExtensions
+
 /** Session factory with the engine's canonical configuration.
   *
   * Tuned for correctness parity with the DuckDB oracle (UTC session
@@ -13,14 +15,18 @@ import org.apache.spark.sql.SparkSession
   * Mirrors the reference's Spark tuning surface
   * (`config/spark/spark-defaults.conf:19-21` — AQE on, coalesce partitions,
   * small shuffle-partition count) re-expressed for Spark 4.
+  *
+  * The only session factory: every main, spec and benchmark builds here,
+  * so every session carries the same conf and the engine's native
+  * functions and planner strategy ([[GraftExtensions]]).
   */
 object GraftSession {
 
   def builder(appName: String = "graft", cores: String = "*"): SparkSession.Builder =
-    SparkSession
-      .builder()
+    SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

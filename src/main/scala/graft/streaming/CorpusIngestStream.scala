@@ -79,10 +79,11 @@ object CorpusIngestStream {
     * bounded small-graph tier instead of 2+ eager checkpoint rounds),
     * and lands each index epoch as one file per bucket (bucket-aligned
     * repartition in [[graft.operators.NearDupIndex.appendCoded]]).
-    * Measured ([[graft.tools.ProfileCorpusTrigger]], 5k docs × ~60
-    * words, 10% planted near-dups, quiet local[32]): 20.9 s (r6) →
-    * 8.2 s per trigger; StreamBench corpus leg 171 → 545 docs/s at
-    * batch 5k. Stage breakdown (eager profile, seconds): curate 0.5 /
+    * Measured (one trigger of 5k docs × ~60 words, 10% planted
+    * near-dups, quiet local[32]): 20.9 s (r6) → 8.2 s per trigger;
+    * StreamBench corpus leg 171 → 545 docs/s at batch 5k. Stage
+    * breakdown (each cached relation forced eagerly so the stages
+    * separate, seconds): curate 0.5 /
     * shingle 0.6 / code 0.7 / intra 1.7 (pairs 1.0, components 0.3) /
     * probe 0.9 / land 0.2 / fold 2.8 (stats 0.3, guard 0.1,
     * shingles∥counts writes 1.1, buckets write 1.0, digest 0.1) — the
@@ -94,11 +95,6 @@ object CorpusIngestStream {
     * `Some(k)`, the fold stops after its k-th relation write (as if the
     * JVM died there) so a test can replay the batch and prove
     * convergence. Production callers never set it.
-    *
-    * `onStage` (profiling only, e.g. [[graft.tools.ProfileCorpusTrigger]])
-    * receives (stage, seconds) per pipeline stage; non-null forces each
-    * cached relation eagerly so the stages are separable — production
-    * callers leave it null and keep the fully lazy plan.
     */
   private[graft] def processBatch(
       spark: SparkSession,
@@ -111,11 +107,8 @@ object CorpusIngestStream {
       curate: DataFrame => DataFrame,
       compactEvery: Int = 0,
       crashAfterFoldRelations: Option[Int] = None,
-      shufflePartitions: Option[Int] = Some(8),
-      onStage: (String, Double) => Unit = null): Unit =
+      shufflePartitions: Option[Int] = Some(8)): Unit =
    MicroBatchConf.withShufflePartitions(spark, shufflePartitions) {
-    def staged[T](name: String)(body: => T): T =
-      graft.runtime.StageTimer.staged(onStage, name)(body)
     // maintenance runs FIRST, before the probe: a crash mid-compaction
     // replays this trigger, and re-running the (replay-idempotent)
     // compaction to its fixpoint BEFORE any probe means the probe never
@@ -125,7 +118,7 @@ object CorpusIngestStream {
     // upToEpoch = batchId - 1: checkpoint-committed epochs can never be
     // replayed, so folding them can't shadow a replayed batch's own docs.
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      staged("compact")(NearDupIndex.compact(spark, indexName, upToEpoch = batchId - 1))
+      NearDupIndex.compact(spark, indexName, upToEpoch = batchId - 1)
     // full-row dedup first: a re-delivered file (same doc in two files of
     // one trigger) must not wedge the stream on append's id guard — the
     // guard throws, the replay re-reads the same files, and the trigger
@@ -143,27 +136,14 @@ object CorpusIngestStream {
     val buckets = Dedup.lshBuckets(
       Dedup.minhashSignatures(sh, "doc_id", cfg.numHashes),
       "doc_id", cfg.bands, cfg.rowsPerBand).cache()
-    if (onStage != null) { // force the caches so later stages time cleanly
-      staged("curate")(b.count()); staged("shingle")(sh.count())
-      staged("code")(buckets.count())
-    }
     val accepted = try {
       // 1. intra-batch: one representative per near-dup cluster
-      val intraLosers = staged("intra") {
-        var pairs = Dedup.verifyCandidates(
-          Dedup.lshCandidates(buckets, "doc_id"), sh, counts, minJ)
-        if (onStage != null) { // profiling: split pair generation from CC
-          pairs = pairs.cache()
-          staged("intra.pairs")(pairs.count())
-        }
-        // connectedComponents runs eagerly (checkpointed label rounds)
-        val losers = staged("intra.cc")(
-          Dedup.connectedComponents(pairs, "a_id", "b_id")
-            .filter(F.col("id") =!= F.col("comp"))
-            .select(F.col("id").as("doc_id")))
-        if (onStage != null) pairs.unpersist()
-        losers
-      }
+      val pairs = Dedup.verifyCandidates(
+        Dedup.lshCandidates(buckets, "doc_id"), sh, counts, minJ)
+      // connectedComponents runs eagerly (checkpointed label rounds)
+      val intraLosers = Dedup.connectedComponents(pairs, "a_id", "b_id")
+        .filter(F.col("id") =!= F.col("comp"))
+        .select(F.col("id").as("doc_id"))
       val intra = b.join(intraLosers, Seq("doc_id"), "left_anti")
       // 2. cross-history: drop anything the index already covers; a replay
       //    must not be shadowed by its own partial fold, hence excludeEpoch.
@@ -187,10 +167,10 @@ object CorpusIngestStream {
       //    failure stays primary; the land write still finishes before
       //    the finally unpersists its caches, so a replayed trigger never
       //    overwrites batch=N under an orphaned land write.
-      if (staged("probe")(!accepted.isEmpty)) {
+      if (!accepted.isEmpty) {
         val accIds = accepted.select("doc_id")
         Par.awaitAll(Seq(
-          () => staged("fold")(crashAfterFoldRelations match {
+          () => crashAfterFoldRelations match {
             case Some(k) =>
               NearDupIndex.appendPartial(accepted, "doc_id", "text", indexName, batchId, cfg, k)
             case None =>
@@ -198,11 +178,9 @@ object CorpusIngestStream {
                 sh.join(accIds, Seq("doc_id"), "left_semi"),
                 buckets.join(accIds, Seq("doc_id"), "left_semi"),
                 "doc_id", indexName, batchId, cfg,
-                counts = Some(counts.join(accIds, Seq("doc_id"), "left_semi")),
-                onStage = onStage)
-          }),
-          () => staged("land")(
-            accepted.write.mode("overwrite").parquet(s"$acceptedPath/batch=$batchId"))))
+                counts = Some(counts.join(accIds, Seq("doc_id"), "left_semi")))
+          },
+          () => accepted.write.mode("overwrite").parquet(s"$acceptedPath/batch=$batchId")))
       }
     } finally {
       // this runs once per trigger, forever — and a FAILED trigger gets

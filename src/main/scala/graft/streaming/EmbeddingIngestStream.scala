@@ -6,7 +6,6 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField,
 import org.apache.spark.sql.{functions => F}
 
 import graft.operators.IvfIndex
-import graft.plans.GraftFunctions
 
 /** Streaming embedding ingest with near-duplicate suppression against the
   * persisted IVF index — the vector analog of [[CorpusIngestStream]]:
@@ -128,7 +127,6 @@ object EmbeddingIngestStream {
       shufflePartitions: Option[Int] = Some(8),
       coarseProbesGate: Int = 0): Unit =
    MicroBatchConf.withShufflePartitions(spark, shufflePartitions) {
-    GraftFunctions.register(spark)
     // `indexRoot` is a HANDLE: resolved to its live generation every
     // trigger, so a rebuild committed below (or by another maintenance
     // driver) is picked up without restarting the stream

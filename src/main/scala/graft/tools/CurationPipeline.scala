@@ -81,7 +81,6 @@ object CurationPipeline {
       splits: Seq[(String, Int)] = Nil, splitSeed: String = "split-v1",
       semanticPairs: Option[DataFrame] = None,
       normalize: Boolean = false): StageCounts = {
-    if (minDeflateRatio > 0 || normalize) graft.plans.GraftFunctions.register(spark)
     val all = Tables.load(spark, sfDir, "documents")
     // the benchmark side must be normalized with the SAME fold as the
     // corpus: decontamination matches shingle STRINGS, so a benchmark

@@ -48,8 +48,9 @@ import graft.runtime.{GraftSession, Tables}
   *      not just the kernels.
   *
   *   6. highd_assign — the d=1536 × C=2048 flat-vs-two-level assignment
-  *      reading (ProfileAssign's measured-crossover honesty), regenerated
-  *      per round so the claim stays standing evidence.
+  *      reading (the measured crossover in
+  *      [[graft.plans.TwoLevelNearestCellsExpression]]'s scaladoc),
+  *      regenerated per round so the claim stays standing evidence.
   *
   * Usage: runMain graft.tools.ScaleBench [sfDir] [outJson] [legs]
   * (`legs` = comma-set of text,boiler,semantic,ann,pipeline,highd;
@@ -382,16 +383,16 @@ object ScaleBench {
     }
 
     // --- 7. highd_assign: the d=1536 × C=2048 assignment-kernel
-    //     reading regenerated per round (the ProfileAssign scaladoc's
-    //     measured-crossover honesty as standing evidence, not a
-    //     one-off): at a 25 MB centroid matrix the per-row sweep is
+    //     reading regenerated per round (the measured crossover in
+    //     TwoLevelNearestCellsExpression's scaladoc as standing
+    //     evidence, not a one-off): at a 25 MB centroid matrix the per-row sweep is
     //     memory-bandwidth-bound and the flat kernel's sequential access
     //     can beat the two-level tier's scattered member order despite
     //     ~4× fewer doubles touched. Kernel cost is independent of
     //     centroid QUALITY, so centroids are sampled corpus vectors —
     //     no k-means fit inflates the leg; warm = second run.
     if (legs("highd")) {
-      val (dHi, cHi, nHi, gHi) = (1536, 2048, 20000, 11) // g ≈ √C/4, ProfileAssign's dial
+      val (dHi, cHi, nHi, gHi) = (1536, 2048, 20000, 11) // g ≈ √C/4, the measured dial
       val hi = spark.range(nHi).select(F.col("id"),
         F.expr(s"transform(sequence(1, $dHi), " +
           "x -> cast(pmod(xxhash64(id, x), 2001) as double) / 1000.0 - 1.0)")

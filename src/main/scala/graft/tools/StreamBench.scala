@@ -89,6 +89,20 @@ object StreamBench {
     }
 
     if (legs("score")) {
+      // untimed warmup (see the corpus leg): one small trigger into
+      // scratch predictions/alerts/checkpoint dirs — a cold first trigger
+      // spends most of the leg (7.7-10 s of 11-15 s at 60k rows on 4
+      // cores) before its first Spark job. Its own Random keeps the
+      // later legs' data unchanged.
+      val warmIn = work.resolve("warm-score-in")
+      Files.createDirectories(warmIn)
+      val warmRnd = new Random(7L)
+      Files.write(warmIn.resolve("part00.jsonl"), String.join("\n",
+        (0 until 200).map(i => envelope(warmRnd, i)): _*).getBytes("UTF-8"))
+      val warm = ScoringStream.start(spark, warmIn.toString,
+        work.resolve("warm-preds").toString, work.resolve("warm-alerts").toString,
+        work.resolve("warm-ckpt-s").toString)
+      warm.processAllAvailable(); warm.stop()
       val scoreSec = timed("score") {
         val q = ScoringStream.start(spark, in.toString,
           work.resolve("preds").toString, work.resolve("alerts").toString,

@@ -156,7 +156,6 @@ class CurationSpec extends AnyFunSuite {
 
   test("deflate_ratio separates repetitive from varied text; codegen matches direct compute") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(59L)
     val varied = Seq.fill(200)(s"w${rnd.nextInt(100000)}").mkString(" ")
     val repetitive = Seq.fill(200)("spam").mkString(" ")

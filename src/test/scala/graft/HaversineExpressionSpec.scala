@@ -4,15 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.HaversineExpression
-
 class HaversineExpressionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = graft.runtime.GraftSession.builder("graft-test", "8").getOrCreate()
-    HaversineExpression.register(s)
-    s
-  }
+  lazy val spark: SparkSession =
+    graft.runtime.GraftSession.builder("graft-test", "8").getOrCreate()
 
   test("native expression matches the composed-Column implementation") {
     import spark.implicits._

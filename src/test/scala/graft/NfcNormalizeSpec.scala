@@ -16,11 +16,8 @@ import graft.plans.NfcNormalizeExpression
   */
 class NfcNormalizeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = graft.runtime.GraftSession.builder("graft-test", "8").getOrCreate()
-    NfcNormalizeExpression.register(s)
-    s
-  }
+  lazy val spark: SparkSession =
+    graft.runtime.GraftSession.builder("graft-test", "8").getOrCreate()
 
   // decomposed (NFD) spellings and their precomposed (NFC) images
   private val cafeNfd = "Cafe\u0301"          // e + combining acute

@@ -410,21 +410,52 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects native functions at session build") {
-    spark // materialize the shared session first
+    // every native function and the band-join strategy, with no
+    // registration call: they must come from the session build alone
+    def assertNative(s: SparkSession): Unit = {
+      def one(sql: String) = s.sql(sql).head().get(0)
+      val km = one("SELECT haversine_km(40.7128, -74.0060, 34.0522, -118.2437)")
+        .asInstanceOf[Double]
+      assert(km > 3900 && km < 4000)
+      assert(one("SELECT deflate_ratio(repeat('ab', 200))").asInstanceOf[Double] < 0.2)
+      assert(one("SELECT nfc_normalize('Cafe\u0301')") == "Caf\u00e9")
+      assert(one("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))") == 11.0)
+      val cents = "array(named_struct('c', 0, 'v', array(1.0d, 0.0d)), " +
+        "named_struct('c', 1, 'v', array(5.0d, 0.0d)))"
+      assert(s.sql(s"SELECT ivf_nearest_cells(array(4.0d, 0.0d), $cents, 1)")
+        .head().getSeq[Int](0) == Seq(1))
+      val groups = "array(named_struct('g', array(3.0d, 0.0d), 'm', array(0, 1)))"
+      assert(s.sql(s"SELECT ivf_nearest_cells_2l(array(4.0d, 0.0d), $cents, $groups, 1, 1)")
+        .head().getSeq[Int](0) == Seq(1))
+      assert(s.sql("SELECT topk_rows(named_struct('s', CAST(id AS DOUBLE), 't', id), 2) " +
+        "FROM range(5)").head().getSeq[org.apache.spark.sql.Row](0).size == 2)
+      assert(s.sql("SELECT freq_items_sketch(CAST(id % 2 AS STRING), 2) FROM range(5)")
+        .head().getSeq[org.apache.spark.sql.Row](0).nonEmpty)
+      assert(one("SELECT bounded_extremes(id, 2) FROM range(5)") != null)
+      val bloom = org.apache.spark.util.sketch.BloomFilter.create(10)
+      bloom.putLong(7L)
+      val bos = new java.io.ByteArrayOutputStream()
+      bloom.writeTo(bos)
+      val hex = bos.toByteArray.map(b => f"${b & 0xff}%02X").mkString
+      assert(one(s"SELECT graft_bloom_contains(X'$hex', 7L)") == true)
+      import s.implicits._
+      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+      val band = graft.plans.BandJoin.join(Seq((1L, t0)).toDF("k", "ts"),
+        Seq((1L, t0)).toDF("k2", "ts2"), "k", "k2", "ts", "ts2", 1000000L)
+      assert(band.count() == 1)
+      assert(band.queryExecution.executedPlan.toString.contains("BandJoin"))
+    }
+    // a child session of the shared GraftSession session
+    assertNative(spark.newSession())
+    // a session built elsewhere, through the documented extensions contract
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
+      assertNative(SparkSession.builder()
         .master("local[2]")
         .appName("ext-test")
         .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      val km = s2.sql("SELECT haversine_km(40.7128, -74.0060, 34.0522, -118.2437) AS km")
-        .head().getDouble(0)
-      assert(km > 3900 && km < 4000)
-      val d = s2.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
-        .head().getDouble(0)
-      assert(d == 11.0)
+        .getOrCreate())
     } finally {
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)

@@ -219,7 +219,6 @@ class PropertySpec extends AnyFunSuite {
 
   test("vec_dot edge cases: empty, mismatched length, mixed element types") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val empty = spark.sql(
       "SELECT vec_dot(CAST(array() AS ARRAY<DOUBLE>), CAST(array() AS ARRAY<DOUBLE>))")
       .head().getDouble(0)

@@ -678,7 +678,8 @@ class SimilaritySpec extends AnyFunSuite {
     // to end and the per-nProbe parity above pins bit-for-bit (the join
     // kernel stays as the independent cross-check route)
     assert(IvfIndex.LiteralKernelMaxCells == 64,
-      "threshold moved — re-run ProfileAssign and revisit the parity coverage")
+      "threshold moved — its measured basis is the LiteralKernelMaxCells scaladoc " +
+        "(literal ≈ routed at C=16, ~8× slower at C=128); revisit the parity coverage")
     // nProbe past C must degrade to C cells on every kernel, not throw
     val all = asMap(IvfIndex.assignCellsMulti(emb, "vec_id", "embedding", root, 99))
     val allM = asMap(IvfIndex.assignCellsMultiExpr(emb, "vec_id", "embedding", cents, 99))

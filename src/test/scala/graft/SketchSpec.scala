@@ -111,7 +111,6 @@ class SketchSpec extends AnyFunSuite {
   // guaranteed present with a valid [count_lo, count_hi] interval.
 
   private def freqItems(df: org.apache.spark.sql.DataFrame, col: String, k: Int) = {
-    graft.plans.GraftFunctions.register(spark)
     df.agg(F.call_function("freq_items_sketch", F.col(col), F.lit(k)).as("fi"))
       .select(F.explode(F.col("fi")).as("s"))
       .select("s.item", "s.count_lo", "s.count_hi")
@@ -221,7 +220,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("freq_items_sketch partial-aggregates below the exchange per group") {
-    graft.plans.GraftFunctions.register(spark)
     val docs = graft.runtime.Tables.load(spark, sf, "documents")
     val q = docs.groupBy("lang")
       .agg(F.call_function("freq_items_sketch", F.col("source"), F.lit(4)).as("fi"))

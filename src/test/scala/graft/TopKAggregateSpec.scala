@@ -30,7 +30,6 @@ class TopKAggregateSpec extends AnyFunSuite {
 
   test("serialization round-trips across merge boundaries (many partitions)") {
     import org.apache.spark.sql.{functions => F}
-    graft.plans.GraftFunctions.register(spark)
     val big = spark.range(0, 10000, 1, 32) // 32 partitions forces merges
       .select(
         (F.col("id") % 7).as("k"),
